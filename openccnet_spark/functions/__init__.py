@@ -217,26 +217,27 @@ def convert_cols_udf():
     return _convert
 
 
+def _map_udf(row_fn, return_type=StringType()):
+    """Single-column pandas UDF applying ``row_fn()`` to every non-NULL
+    row; NULL stays NULL. ``row_fn`` runs once per Arrow batch on the
+    worker, so it can fetch the worker-cached Converter."""
+
+    @F.pandas_udf(return_type)
+    def _map(s: pd.Series) -> pd.Series:
+        f = row_fn()
+        return s.map(lambda t: f(t) if t is not None else None)
+
+    return _map
+
+
 def st_udf():
     """O10 ``St`` char-only conversion."""
-
-    @F.pandas_udf(StringType())
-    def _st(s: pd.Series) -> pd.Series:
-        cc = _worker_converter()
-        return s.map(lambda t: cc.st(t) if t is not None else None)
-
-    return _st
+    return _map_udf(lambda: _worker_converter().st)
 
 
 def ts_udf():
     """O10 ``Ts`` char-only conversion."""
-
-    @F.pandas_udf(StringType())
-    def _ts(s: pd.Series) -> pd.Series:
-        cc = _worker_converter()
-        return s.map(lambda t: cc.ts(t) if t is not None else None)
-
-    return _ts
+    return _map_udf(lambda: _worker_converter().ts)
 
 
 def zho_check_udf():
@@ -252,13 +253,7 @@ def zho_check_udf():
 
 def normalize_compat_udf():
     """O12 CJK compatibility-ideograph normalization as its own column op."""
-
-    @F.pandas_udf(StringType())
-    def _norm(s: pd.Series) -> pd.Series:
-        cc = _worker_converter()
-        return s.map(lambda t: cc.normalize_compat(t) if t is not None else None)
-
-    return _norm
+    return _map_udf(lambda: _worker_converter().normalize_compat)
 
 
 def detofu_udf(level: int = 0, custom_text: str | None = None, custom_pairs: dict | None = None):
@@ -323,26 +318,25 @@ def register_sql_functions(spark, prefix: str = "cc_") -> list:
     Returns the registered names.
     """
 
-    @F.pandas_udf(StringType())
-    def _convert2(text: pd.Series, config: pd.Series) -> pd.Series:
-        cc = _worker_converter()
-        return pd.Series(
-            # NULL config propagates NULL (never silently the instance
-            # default direction), matching every other SQL function's
-            # NULL handling
-            [None if t is None or c is None else cc.convert(t, c) for t, c in zip(text, config)]
-        )
+    def convert2(punct: bool):
+        @F.pandas_udf(StringType())
+        def _convert2(text: pd.Series, config: pd.Series) -> pd.Series:
+            cc = _worker_converter()
+            return pd.Series(
+                # NULL config propagates NULL (never silently the instance
+                # default direction), matching every other SQL function's
+                # NULL handling
+                [
+                    None if t is None or c is None else cc.convert(t, c, punct)
+                    for t, c in zip(text, config)
+                ]
+            )
 
-    @F.pandas_udf(StringType())
-    def _convert2p(text: pd.Series, config: pd.Series) -> pd.Series:
-        cc = _worker_converter()
-        return pd.Series(
-            [None if t is None or c is None else cc.convert(t, c, punct=True) for t, c in zip(text, config)]
-        )
+        return _convert2
 
     pairs = [
-        (f"{prefix}convert", _convert2),
-        (f"{prefix}convert_punct", _convert2p),
+        (f"{prefix}convert", convert2(False)),
+        (f"{prefix}convert_punct", convert2(True)),
         (f"{prefix}st", st_udf()),
         (f"{prefix}ts", ts_udf()),
         (f"{prefix}zho_check", zho_check_udf()),
@@ -358,19 +352,11 @@ def langid_udf():
     """fastText-style language ID (hashed char n-gram profiles)."""
     from .langid import detect_language
 
-    @F.pandas_udf(StringType())
-    def _langid(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: detect_language(t) if t is not None else None)
-
-    return _langid
+    return _map_udf(lambda: detect_language)
 
 
 def ppl_udf():
     """KenLM-style char-bigram perplexity of the (converted) text."""
     from .ppl import perplexity
 
-    @F.pandas_udf("double")
-    def _ppl(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: perplexity(t) if t is not None else None)
-
-    return _ppl
+    return _map_udf(lambda: perplexity, "double")

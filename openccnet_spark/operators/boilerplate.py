@@ -26,8 +26,7 @@ matches nothing for ``\\uXXXX`` escapes — CLAUDE.md) and constructs
 Java regex and RE2 agree on.
 
 The reference repo (laisuk/OpenccNet) has no counterpart; this is the
-extraction stage of the web-pipeline family (``sources/warc.py`` ->
-here -> ``operators/quality.py``).
+HTML main-text extraction stage that feeds ``operators/quality.py``.
 """
 
 from __future__ import annotations

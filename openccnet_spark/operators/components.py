@@ -131,6 +131,14 @@ class _RoundCheckpointer:
         self.last_durable = False
 
     def step(self, df: DataFrame, force: bool = False) -> DataFrame:
+        """Cut the lineage of one round's frame and return the frame the
+        next round reads.
+
+        Invariant (``step_digest`` relies on it): a localCheckpoint round
+        and a durable round materialize ``df`` EAGERLY, so any observed
+        metrics on ``df`` have fired when this returns. A persist-only
+        round (reliable mode, mid-interval) is lazy; its metrics fire only
+        at the first action on the returned frame."""
         self._round += 1
         if not self.reliable:
             return df.localCheckpoint()

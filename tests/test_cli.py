@@ -109,14 +109,32 @@ def test_convert_stream_rejects_files(tmp_path):
 def test_dictgen_reference_format_passthrough(tmp_path):
     """`openccnet dictgen -f cbor -o ...` (leading option, reference
     DictgenCommand flags) must flow through the passthrough shim and
-    produce a loadable reference-format bundle."""
+    produce a loadable reference-format bundle. The lexicon sources are
+    written from the committed bundle, so the test needs no reference
+    checkout."""
     from openccnet_spark.bundle_interop import load_reference_bundle
     from openccnet_spark.dictionary import SLOTS, load_bundle
+    from tools.dictgen import SLOT_FILES
+
+    compiled = load_bundle()
+    src = tmp_path / "dicts"
+    src.mkdir()
+    for slot, fname in SLOT_FILES.items():
+        lines = (f"{k}\t{v}\n" for k, v in compiled.slots[slot].items())
+        (src / fname).write_text("".join(lines), encoding="utf-8")
+    (src / "CJK_Compatibility_Ideographs.txt").write_text(
+        "".join(f"{chr(k)}\t{v}\n" for k, v in compiled.compat_table.items()),
+        encoding="utf-8",
+    )
+    tofu = compiled.detofu.items()
+    (src / "TSCharactersTofu.txt").write_text(
+        "".join(f"{c}\t{fb}\tExt{'BCDEFGHI'[lvl]}\n" for c, (fb, lvl) in tofu),
+        encoding="utf-8",
+    )
 
     out = tmp_path / "dictionary_maxlength.cbor"
-    assert main(["dictgen", "-f", "cbor", "--out", str(out)]) == 0
+    assert main(["dictgen", "-f", "cbor", "--src", str(src), "--out", str(out)]) == 0
     b = load_reference_bundle(out)
-    compiled = load_bundle()
     for s in SLOTS:
         assert b.slots[s] == compiled.slots[s], s
 

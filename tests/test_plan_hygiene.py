@@ -146,22 +146,6 @@ def test_salted_join_carries_salt_in_join_keys(spark):
     assert "_salt" in plan
 
 
-def test_url_family_is_pure_jvm_with_one_exchange(spark):
-    """The URL curation family must stay pure JVM string expressions:
-    canonicalize is a zero-exchange projection (runs inside the scan
-    stage at 100 TB), and the gate/dedup pay exactly ONE data shuffle
-    (hashpartitioning on canon_url). A Python stage or a second
-    exchange here would re-shuffle every crawled URL."""
-    qs = entry_mod.queries()
-    canon = _plan(qs["url_canonicalize"](spark, SF_DIR), "simple")
-    assert "Exchange" not in canon
-    assert "EvalPython" not in canon and "MapInPandas" not in canon
-    for name in ("url_domain_gate", "url_dedup"):
-        plan = _plan(qs[name](spark, SF_DIR), "simple")
-        assert plan.count("Exchange hashpartitioning") == 1, name
-        assert "EvalPython" not in plan and "MapInPandas" not in plan, name
-
-
 def test_conv_fold_is_one_conv_shuffle_no_window(spark):
     """conv_fold_tools must be a single hashpartitioning(conv_id)
     exchange feeding a JVM aggregate fold — never a Window over turns

@@ -381,12 +381,35 @@ SELECT node, min(label) FROM walk GROUP BY node
     assert got == oracle and len(got) == 1000
 
 
-def test_checkpoint_interval_same_result_bounded_disk(spark, tmp_path):
+@pytest.fixture
+def ckpt_dir(spark, tmp_path):
+    """Point the session's checkpoint dir under ``tmp_path`` for one test."""
+    sc = spark.sparkContext
+    old_dir = sc.getCheckpointDir()
+    ckpt = str(tmp_path / "ckpt")
+    sc.setCheckpointDir(ckpt)
+    yield ckpt
+    if old_dir is not None:
+        sc.setCheckpointDir(old_dir)
+    else:
+        # can't unset; point at a dir that outlives tmp_path like
+        # _checkpointer's auto-dir would
+        import atexit
+        import shutil
+        import tempfile
+
+        fresh = tempfile.mkdtemp(prefix="openccnet-ckpt-")
+        atexit.register(shutil.rmtree, fresh, ignore_errors=True)
+        sc.setCheckpointDir(fresh)
+
+
+def test_checkpoint_interval_same_result_bounded_disk(spark, ckpt_dir):
     """checkpoint_interval=k (reliable mode) must (a) produce identical
     components to every-round checkpointing for BOTH algorithms, and
     (b) leave at most ONE live iteration checkpoint on disk at the end —
     prior rounds' rdd-* dirs are deleted as new checkpoints land."""
     import os
+    import shutil
 
     from openccnet_spark.operators.components import (
         connected_components,
@@ -396,47 +419,69 @@ def test_checkpoint_interval_same_result_bounded_disk(spark, tmp_path):
     # multi-round graph: two chains + a clique (propagation needs ~4 rounds)
     edges = [(i, i + 1) for i in range(8)] + [(20, 21), (21, 22), (20, 22), (30, 31)]
     pairs = spark.createDataFrame(edges, "a long, b long")
-    sc = spark.sparkContext
-    old_dir = sc.getCheckpointDir()
-    ckpt = str(tmp_path / "ckpt")
-    sc.setCheckpointDir(ckpt)
-    try:
-        for fn, n_final in ((connected_components, 1), (connected_components_star, 2)):
-            base = {
-                r.node: r.component
-                for r in fn(pairs, reliable=True, checkpoint_interval=1).collect()
-            }
-            for d in os.listdir(ckpt):
-                import shutil
+    for fn, n_final in ((connected_components, 1), (connected_components_star, 2)):
+        base = {
+            r.node: r.component
+            for r in fn(pairs, reliable=True, checkpoint_interval=1).collect()
+        }
+        for d in os.listdir(ckpt_dir):
+            shutil.rmtree(os.path.join(ckpt_dir, d))
+        got = {
+            r.node: r.component
+            for r in fn(pairs, reliable=True, checkpoint_interval=3).collect()
+        }
+        assert got == base, fn.__name__
+        rdd_dirs = [
+            os.path.join(root, d)
+            for root, dirs, _ in os.walk(ckpt_dir)
+            for d in dirs
+            if d.startswith("rdd-")
+        ]
+        # propagation keeps only the last round's checkpoint; star also
+        # keeps the forced final read-off frame
+        assert len(rdd_dirs) <= n_final, (fn.__name__, rdd_dirs)
 
-                shutil.rmtree(os.path.join(ckpt, d))
-            got = {
-                r.node: r.component
-                for r in fn(pairs, reliable=True, checkpoint_interval=3).collect()
-            }
-            assert got == base, fn.__name__
-            rdd_dirs = [
-                os.path.join(root, d)
-                for root, dirs, _ in os.walk(ckpt)
-                for d in dirs
-                if d.startswith("rdd-")
-            ]
-            # propagation keeps only the last round's checkpoint; star also
-            # keeps the forced final read-off frame
-            assert len(rdd_dirs) <= n_final, (fn.__name__, rdd_dirs)
-    finally:
-        if old_dir is not None:
-            sc.setCheckpointDir(old_dir)
-        else:
-            # can't unset; point at a dir that outlives tmp_path like
-            # _checkpointer's auto-dir would
-            import atexit
-            import shutil
-            import tempfile
 
-            fresh = tempfile.mkdtemp(prefix="openccnet-ckpt-")
-            atexit.register(shutil.rmtree, fresh, ignore_errors=True)
-            sc.setCheckpointDir(fresh)
+@pytest.mark.parametrize(
+    "reliable, interval",
+    [(False, 1), (True, 1), (True, 2)],
+    ids=["local_checkpoint", "durable_checkpoint", "persist_count"],
+)
+def test_step_digest_matches_separate_aggregate(spark, ckpt_dir, reliable, interval):
+    """step_digest's observed (count, xor) equals a separate count +
+    bit_xor(xxhash64) aggregate on each step path: localCheckpoint, a
+    durable checkpoint, and a persist-only first round that needs its own
+    count(). The call runs in a daemon thread with a deadline, so a Spark
+    change that stops the observed metrics firing fails here instead of
+    blocking forever in ``Observation.get``."""
+    import threading
+
+    from openccnet_spark.operators.components import _RoundCheckpointer
+
+    df = spark.createDataFrame([(i, i % 7) for i in range(200)], "node long, label long")
+    ck = _RoundCheckpointer(reliable, interval)
+    result: dict = {}
+
+    def run():
+        try:
+            result["out"], result["digest"] = ck.step_digest(df, ("node", "label"))
+        except Exception as exc:  # re-raised on the test thread below
+            result["error"] = exc
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "step_digest did not return: observed metrics never fired"
+    if "error" in result:
+        raise result["error"]
+    assert ck.last_durable == (reliable and interval == 1)
+    exp = df.agg(
+        F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("node", "label")).alias("x")
+    ).first()
+    assert result["digest"] == (exp.n, exp.x)
+    assert result["out"].count() == exp.n
+    for h in ck.drain():
+        h.unpersist()
 
 
 def test_components_driver_query_releases_all_caches(spark):
