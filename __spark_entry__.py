@@ -279,7 +279,7 @@ def _q_dedup_passage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     handles: list = []
     out = passage_dedup(_doubled_docs(spark, sf_dir), persist=True, handles=handles)
-    out._persist_handles = handles  # released by bench after materialization
+    out._persist_handles = handles  # released by the caller; see queries()
     return out
 
 
@@ -324,26 +324,6 @@ def _q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-level decontamination: corpus vectors within cos >= 0.99
-    of any eval vector (eval = vec_id % 37 == 5, the n-gram query's
-    split; planted contamination = exact eval copies at +100000). The
-    cross-set LSH bucket join — the eval side is bounded, the corpus
-    never cross-joins — shares the near-dup family's recall argument, so
-    the oracle is the brute-force cosine join."""
-    from openccnet_spark.operators.similarity import semantic_decontaminate
-
-    embs = _read(spark, sf_dir, "embeddings")
-    eval_df = embs.filter(F.col("vec_id") % 37 == 5)
-    corpus = embs.filter(F.col("vec_id") % 37 != 5).unionByName(
-        eval_df.withColumn("vec_id", F.col("vec_id") + 100000)
-    )
-    handles: list = []
-    out = semantic_decontaminate(corpus, eval_df, persist=True, handles=handles)
-    out._persist_handles = handles  # released by bench after materialization
-    return out
-
-
 def _q_html_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """jusText-lite boilerplate removal: synthesized multi-block pages
     (nav + content paragraph + cookie banner + link footer) classified
@@ -384,14 +364,13 @@ def _q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     handles: list = []
     out = substring_dedup(_doubled_docs(spark, sf_dir), persist=True, handles=handles)
-    out._persist_handles = handles  # released by bench after materialization
+    out._persist_handles = handles  # released by the caller; see queries()
     return out
 
 
 def _mutant_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents + near-duplicates (each doc minus its last word); the
-    mutation expression lives in dedup.append_word_dropped_mutants so the
-    bench's scaled family measures the identical shape."""
+    mutation expression lives in dedup.append_word_dropped_mutants."""
     from openccnet_spark.operators.dedup import append_word_dropped_mutants
 
     return append_word_dropped_mutants(_read(spark, sf_dir, "documents"))
@@ -406,8 +385,9 @@ def _q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     handles: list = []
     out = minhash_near_duplicates(_mutant_docs(spark, sf_dir), persist=True, handles=handles)
     # unpersist contract: set on the FINAL frame (any further transform
-    # would drop the attribute); bench._run_to_noop releases these after
-    # materialization so cached frames don't pile up across a shared session
+    # would drop the attribute); the caller releases these after
+    # materialization (see queries()) so cached frames don't pile up across
+    # a shared session
     out._persist_handles = handles
     return out
 
@@ -437,37 +417,7 @@ def _q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     handles: list = []
     out = simhash_near_duplicates(_mutant_docs(spark, sf_dir), persist=True, handles=handles)
-    out._persist_handles = handles  # released by bench after materialization
-    return out
-
-
-def _doubled_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings + planted exact copies (+100000 ids) — the corpus BOTH
-    embedding near-dup queries and their shared oracle assume; change the
-    planting here and in _dedup_embedding_oracle together."""
-    embs = _read(spark, sf_dir, "embeddings")
-    return embs.unionByName(embs.withColumn("vec_id", F.col("vec_id") + 100000))
-
-
-def _q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs over embeddings + planted copies."""
-    from openccnet_spark.operators.similarity import embedding_near_duplicates
-
-    return embedding_near_duplicates(_doubled_embeddings(spark, sf_dir), threshold_milli=990)
-
-
-def _q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dups via the LSH bucket join (the 100 TB path) —
-    must equal the brute-force cross join's output on this corpus (recall
-    at cos>=0.99 is ~1-1.5e-6 per pair), so it shares its oracle."""
-    from openccnet_spark.operators.similarity import lsh_near_duplicates
-
-    handles: list = []
-    out = lsh_near_duplicates(
-        _doubled_embeddings(spark, sf_dir), threshold_milli=990,
-        persist=True, handles=handles,
-    )
-    out._persist_handles = handles  # released by bench after materialization
+    out._persist_handles = handles  # released by the caller; see queries()
     return out
 
 
@@ -573,7 +523,7 @@ def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = incremental_minhash_dedup(
         batch, index_sigs, old, persist=True, handles=handles
     )
-    out._persist_handles = handles  # released by bench after materialization
+    out._persist_handles = handles  # released by the caller; see queries()
     return out
 
 
@@ -606,26 +556,6 @@ def _q_skew_join_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
-
-
-def _q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-5 for query vectors 0..4."""
-    from openccnet_spark.operators.similarity import cosine_topk
-
-    return cosine_topk(_read(spark, sf_dir, "embeddings"), query_ids=[0, 1, 2, 3, 4], k=5)
-
-
-def _q_similarity_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed approximate top-5. Approximate vs EXACT search, but
-    fully deterministic: the oracle replays the identical hyperplane sign
-    fold in DuckDB (same float64 literals, same left-to-right order), so
-    buckets — and the final top-k — value-match. Recall vs the exact path
-    is separately asserted in tests."""
-    from openccnet_spark.operators.similarity import lsh_ann_topk
-
-    # no persist: the corpus tagging is single-use now (the query side
-    # tags its own filtered rows), so caching it would be pure overhead
-    return lsh_ann_topk(_read(spark, sf_dir, "embeddings"), query_ids=[0, 1, 2, 3, 4], k=5)
 
 
 #: (case_id, pages, builder kwargs, pdf_to_text kwargs, expected) — the PDF
@@ -781,131 +711,6 @@ def _q_textfiles_encodings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (k-means inverted-file) approximate top-5 — the second scale
-    path beside the LSH buckets. Deterministic seeded-sample centroids, so
-    the oracle rebuilds the identical index in DuckDB and value-matches.
-    NB: the oracle's centroids come from the driver contract's sf0.01
-    tables (override with SPARK_GRAFT_ORACLE_SF_DIR, which must match the
-    tables the oracle views read); this query samples from ``sf_dir``, so
-    the value comparison is only meaningful when the two agree — sf0.01 in
-    the driver's run."""
-    from openccnet_spark.operators.similarity import ivf_topk
-
-    return ivf_topk(_read(spark, sf_dir, "embeddings"), query_ids=[0, 1, 2, 3, 4], k=5)
-
-
-def _q_similarity_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with ``sample_mod=4`` — the knob that bounds training cost as
-    the corpus grows (train on the deterministic id%4==0 slice, index and
-    search the FULL corpus). This is the 100 TB story's load-bearing cost
-    bound, exercised end-to-end: the oracle replays the sampled training
-    bit-exactly (same slice, same integer partial sums), so a knob
-    regression hash-fails like any other query."""
-    from openccnet_spark.operators.similarity import ivf_topk
-
-    return ivf_topk(
-        _read(spark, sf_dir, "embeddings"), query_ids=[0, 1, 2, 3, 4], k=5,
-        sample_mod=4,
-    )
-
-
-def _q_similarity_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of BOTH approximate indexes (hyperplane-LSH ANN and IVF)
-    against the exact top-k, as driver-checked values: per query,
-    recall_milli = floor(|approx ∩ exact| * 1000 / k). The oracle rebuilds
-    all three result sets in DuckDB, so the recall itself is pinned —
-    an index regression (or a drifted centroid/bucket fold) fails the
-    hash check rather than just a local pytest assertion. NB the sf
-    corpora are UNIFORM-RANDOM vectors — the adversarial case for any ANN
-    index (true top-k cosines sit near 0.3, where hyperplane buckets carry
-    little signal) — so modest absolute recall here is the honest value;
-    tests/test_training_ops.py separately asserts high recall on planted
-    near-neighbors, the workload these indexes exist for."""
-    from openccnet_spark.operators.similarity import cosine_topk, ivf_topk, lsh_ann_topk
-
-    emb = _read(spark, sf_dir, "embeddings")
-    qids = [0, 1, 2, 3, 4]
-    k = 5
-    exact = cosine_topk(emb, qids, k=k).select("query_id", "neighbor_id")
-    ann = (
-        lsh_ann_topk(emb, qids, k=k)
-        .select("query_id", "neighbor_id")
-        .withColumn("ann_hit", F.lit(1))
-    )
-    ivf = (
-        ivf_topk(emb, qids, k=k)
-        .select("query_id", "neighbor_id")
-        .withColumn("ivf_hit", F.lit(1))
-    )
-    return (
-        exact.join(ann, ["query_id", "neighbor_id"], "left")
-        .join(ivf, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.floor(F.count("ann_hit") * 1000 / k).cast("long").alias("ann_recall_milli"),
-            F.floor(F.count("ivf_hit") * 1000 / k).cast("long").alias("ivf_recall_milli"),
-        )
-    )
-
-
-def _planted_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings + planted NEAR-neighbors at vec_id+100000: each copy has
-    its last element zeroed — a deterministic perturbation both engines
-    reproduce EXACTLY (no float arithmetic, just element replacement), so
-    cos(original, copy) ~ 0.99 instead of the degenerate 1.0 of an exact
-    duplicate. This is the workload an ANN index exists for; the uniform-
-    random sf vectors in `similarity_recall` are its adversarial floor."""
-    emb = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    pert = emb.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.concat(
-            F.slice("embedding", 1, 63), F.array(F.lit(0.0).cast("float"))
-        ).alias("embedding"),
-    )
-    return emb.unionByName(pert)
-
-
-def _q_similarity_recall_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Planted-neighbor recall: for each query, is its planted near-copy
-    (cos ~ 0.99) in the ANN top-5 and the IVF top-5? The oracle replays
-    both indexes over the same planted corpus AND asserts the floor as a
-    literal (`floor_met` = TRUE): if either index ever misses a planted
-    neighbor, the Spark side computes FALSE and the driver's hash check
-    fails — the recall the index exists to deliver is pinned, not just
-    reported."""
-    from openccnet_spark.operators.similarity import ivf_topk, lsh_ann_topk
-
-    corpus = _planted_embeddings(spark, sf_dir)
-    qids = [0, 1, 2, 3, 4]
-    hit = F.max(
-        F.when(F.col("neighbor_id") == F.col("query_id") + 100000, 1).otherwise(0)
-    )
-    ann = (
-        lsh_ann_topk(corpus, qids, k=5)
-        .groupBy("query_id")
-        .agg(hit.cast("long").alias("ann_hit"))
-    )
-    ivf = (
-        ivf_topk(corpus, qids, k=5)
-        .groupBy("query_id")
-        .agg(hit.cast("long").alias("ivf_hit"))
-    )
-    base = spark.createDataFrame([(q,) for q in qids], "query_id long")
-    return (
-        base.join(ann, "query_id", "left")
-        .join(ivf, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("ann_hit", F.lit(0)).alias("ann_hit"),
-            F.coalesce("ivf_hit", F.lit(0)).alias("ivf_hit"),
-        )
-        .withColumn(
-            "floor_met", (F.col("ann_hit") + F.col("ivf_hit")) == 2
-        )
-    )
-
-
 def _q_textstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counts, quality score, fingerprint over documents."""
     from openccnet_spark.operators import textstats as T
@@ -984,8 +789,7 @@ def _q_quality_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the target rank — identical to the sorted-rank definition because rows
     tied on q share the same q by construction. No Window anywhere in the
     plan (pinned by test_plan_hygiene). Plan built by
-    `textstats.quality_quantiles_frame` — shared with tools/ab_round4.py
-    so the A/B always measures the shipped plan."""
+    `textstats.quality_quantiles_frame`."""
     from openccnet_spark.operators.textstats import quality_quantiles_frame
 
     return quality_quantiles_frame(_read(spark, sf_dir, "documents"))
@@ -1123,7 +927,7 @@ def _q_lm_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the scored frame feeds BOTH top_fraction decompositions and the
     # final tag join — persist so the scoring pipeline runs once; the
-    # driver/bench release via _persist_handles (house rule)
+    # caller releases it via _persist_handles (see queries())
     scored = scored.persist()
     out = ccnet_buckets(scored)
     out._persist_handles = [scored]
@@ -1232,7 +1036,7 @@ def _q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     handles: list = []
     out = budget_select(docs, _TOKEN_BUDGETS, persist=True, handles=handles)
-    out._persist_handles = handles  # released by bench after materialization
+    out._persist_handles = handles  # released by the caller; see queries()
     return out
 
 
@@ -1250,7 +1054,7 @@ def _q_quality_top_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     handles: list = []
     out = top_fraction_select(docs, frac_ppm=_TOP_FRAC_PPM, persist=True, handles=handles)
-    out._persist_handles = handles  # released by bench after materialization
+    out._persist_handles = handles  # released by the caller; see queries()
     return out
 
 
@@ -1281,7 +1085,7 @@ def _q_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         persist=True, handles=handles,
     )
     out = pack_chunks(gated, _PACK_WINDOW, persist=True, handles=handles)
-    out._persist_handles = handles  # released by bench after materialization
+    out._persist_handles = handles  # released by the caller; see queries()
     return out
 
 
@@ -1297,7 +1101,7 @@ def _q_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     handles: list = []
     out = pack_chunks(docs, _PACK_WINDOW, persist=True, handles=handles)
-    out._persist_handles = handles  # released by bench after materialization
+    out._persist_handles = handles  # released by the caller; see queries()
     return out
 
 
@@ -1341,7 +1145,7 @@ def _q_dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         persist=True,
         handles=handles,
     )
-    out._persist_handles = handles  # released by bench after materialization
+    out._persist_handles = handles  # released by the caller; see queries()
     return out
 
 
@@ -1357,7 +1161,7 @@ def _q_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     handles: list = []
     out = mixture_rebalance(docs, _MIX_TARGET_PPM, persist=True, handles=handles)
-    out._persist_handles = handles  # released by bench after materialization
+    out._persist_handles = handles  # released by the caller; see queries()
     return out
 
 
@@ -1394,7 +1198,7 @@ def _q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     handles: list = []
     wq = quantize_weights(train_distributed(docs, sample_mod=2, handles=handles))
     out = score_frame(docs, wq)
-    out._persist_handles = handles  # released by bench after materialization
+    out._persist_handles = handles  # released by the caller; see queries()
     return out
 
 
@@ -1513,43 +1317,6 @@ def _q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch heavy hitters (operators/sketch.py): the sketch
-    ingests weight-compressed distinct words, its counter table is
-    d*w-bounded (4096 cells regardless of corpus size — sketch merging
-    is the same elementwise sum), point estimates broadcast the sketch.
-    The oracle rebuilds identical counters via the shared 60-bit hash
-    family; est >= exact is the CMS guarantee, asserted in tests."""
-    from openccnet_spark.operators.sketch import heavy_hitters
-
-    return heavy_hitters(_read(spark, sf_dir, "documents"))
-
-
-def _q_sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog distinct-word sketch (operators/hll.py): registers are
-    built per corpus half and MERGED (elementwise max) while the oracle
-    computes the register file directly from all words — a merge that is
-    not union-equivalent hash-fails. Ingest pre-aggregates to the
-    512-register grain (map-side combine bounds every exchange at m rows
-    per partition regardless of corpus size); the returned histogram pins
-    every register's content via an order-free xor digest, not just the
-    final estimate."""
-    from openccnet_spark.operators.hll import hll_histogram, hll_merge, hll_registers
-
-    docs = _read(spark, sf_dir, "documents")
-
-    def words(d: DataFrame) -> DataFrame:
-        return d.select(
-            F.explode(
-                F.split(F.coalesce(F.col("text"), F.lit("")), " ")
-            ).alias("w")
-        ).filter(F.col("w") != "")
-
-    h0 = hll_registers(words(docs.filter(F.col("doc_id") % 2 == 0)), "w")
-    h1 = hll_registers(words(docs.filter(F.col("doc_id") % 2 == 1)), "w")
-    return hll_histogram(hll_merge(h0, h1))
-
-
 def _q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe train/val/test split: near-dup pairs -> components ->
     cluster-keyed deterministic 90/5/5 draw, so a document and its
@@ -1601,25 +1368,6 @@ def _q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_select(docs, dsir_weights(tgt, raw), frac_ppm=_DSIR_FRAC_PPM)
 
 
-def _q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style cluster-scoped embedding dedup over the planted
-    doubled corpus (every vector has an exact copy at id+100000, so a
-    wrong cluster assignment, missed pair or wrong smallest-id election
-    hash-fails). Training is the distributed deterministic k-means; the
-    oracle replays it bit-exactly and re-derives clusters, guard, and
-    carried-norm cosine in SQL."""
-    from openccnet_spark.operators.similarity import semantic_dedup
-
-    emb = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    doubled = emb.unionByName(
-        emb.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
-    )
-    handles: list = []
-    out = semantic_dedup(doubled, threshold_milli=990, handles=handles)
-    out._persist_handles = handles  # released by bench after materialization
-    return out
-
-
 def _q_conv_fold_tools(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tool-turn folding (operators/conversations.py): tool turns merge
     into the assistant and consecutive same-role runs collapse via ONE
@@ -1669,26 +1417,6 @@ def _q_conv_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     return render_chat_template(folded)
 
 
-def _q_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continuous-aggregate cascade (operators/hypertable.py): raw events
-    aggregate ONCE at 15-min grain; hourly re-aggregates the 15-min
-    OUTPUT, daily the hourly — each cascade input is bucket-count-sized,
-    never corpus-sized. Values floor to integer milli at the base level
-    so every level is order-free; the oracle computes the DAILY level
-    directly from raw events, pinning re-aggregation associativity."""
-    from openccnet_spark.operators.hypertable import rollup_cascade
-
-    daily = rollup_cascade(_read(spark, sf_dir, "events"))[-1]
-    return daily.select(
-        (F.col("bucket") * 86400).cast("long").alias("day_epoch"),
-        "event_type",
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("sum_v_milli").cast("long").alias("sum_v_milli"),
-        F.col("min_v_milli").cast("long").alias("min_v_milli"),
-        F.col("max_v_milli").cast("long").alias("max_v_milli"),
-    )
-
-
 def _q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity) per user via windows."""
     from pyspark.sql.window import Window
@@ -1709,7 +1437,8 @@ def _q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _replay_n_conv(sf_dir: str) -> int:
     """Conversation count for the streaming replay fixture — a slice of the
-    transcripts scale so the stream stays a few-second job at bench SF."""
+    transcripts scale so the stream stays a few-second job at the harness
+    scale factors."""
     return max(n_conv_for_sf(sf_dir) // 5, 60)
 
 
@@ -1902,6 +1631,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (b) queries whose implementation changed this round, then (c) one
     # representative per long-green family. Everything past position 50 is
     # still covered by tests/test_entry_contract.py's oracle replay.
+    #
+    # _persist_handles: a query that caches intermediate frames sets this
+    # attribute on the frame it returns, and whoever materializes that frame
+    # unpersists the handles afterwards — the harness driver, and here
+    # tests/test_entry_contract.py, test_determinism.py, test_plan_hygiene.py
+    # and test_training_ops.py.
     return {
         # -- flagship + conversion representatives (long-green) ------------
         "pipeline_transcripts": _armed(_q_pipeline),
@@ -1916,7 +1651,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_substring": _armed(_q_dedup_substring),
         "conv_pack": _armed(_q_conv_pack),
         "html_boilerplate": _armed(_q_html_boilerplate),
-        "decontaminate_semantic": _armed(_q_decontaminate_semantic),
         "snapshot_time_travel": _armed(_q_snapshot_time_travel),
         # -- operators whose internals changed in round 8 (persists,
         #    band-key packing, fused Arrow passes, components init,
@@ -1929,10 +1663,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_canonical": _armed(_q_dedup_canonical),
         "split_leakage_safe": _armed(_q_split_leakage_safe),
         "dedup_incremental": _armed(_q_dedup_incremental),
-        "dedup_embedding_lsh": _armed(_q_dedup_embedding_lsh),
-        "similarity_ann": _armed(_q_similarity_ann),
-        "similarity_recall": _armed(_q_similarity_recall),
-        "dedup_semantic": _armed(_q_dedup_semantic),
         "quality_top_fraction": _armed(_q_quality_top_fraction),
         "budget_select": _armed(_q_budget_select),
         "mixture_rebalance": _armed(_q_mixture_rebalance),
@@ -1954,7 +1684,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lm_score_lang": _armed(_q_lm_score_lang),
         "lm_score_trigram": _armed(_q_lm_score_trigram),
         "dedup_exact": _armed(_q_dedup_exact),
-        "similarity_ivf": _armed(_q_similarity_ivf),
         "quality_classifier": _armed(_q_quality_classifier),
         "dedup_bloom_prefilter": _armed(_q_dedup_bloom_prefilter),
         "pdf_reflow_convert": _armed(_q_pdf_reflow_convert),
@@ -1970,9 +1699,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "custom_dict_convert": _armed(_q_custom_dict),
         "events_window": _armed(_q_events_window),
         "events_sessionize": _armed(_q_events_sessionize),
-        "sketch_heavy_hitters": _armed(_q_sketch_heavy_hitters),
-        "sketch_hll_distinct": _armed(_q_sketch_hll_distinct),
-        "hypertable_rollup": _armed(_q_hypertable_rollup),
         "shard_manifest": _armed(_q_shard_manifest),
         "zho_check_transcripts": _armed(_q_zho_transcripts),
         "topk_customers": _armed(_q_topk_customers),
@@ -1988,10 +1714,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact_prehash": _armed(_q_dedup_exact_prehash),
         "dedup_ngram_jaccard": _armed(_q_dedup_ngram_jaccard),
         "skew_join_priority": _armed(_q_skew_join_priority),
-        "dedup_embedding": _armed(_q_dedup_embedding),
-        "similarity_topk": _armed(_q_similarity_topk),
-        "similarity_ivf_sampled": _armed(_q_similarity_ivf_sampled),
-        "similarity_recall_planted": _armed(_q_similarity_recall_planted),
         "textstats": _armed(_q_textstats),
         "vocab_topk": _armed(_q_vocab_topk),
         "bpe_train": _armed(_q_bpe_train),
@@ -2162,7 +1884,6 @@ FROM d GROUP BY text
         "dedup_substring": _substring_oracle(),
         "conv_pack": _conv_pack_oracle("sf0.01"),
         "html_boilerplate": _boilerplate_oracle(),
-        "decontaminate_semantic": _decontaminate_semantic_oracle(),
         "snapshot_time_travel": _snapshot_oracle(),
         "dedup_minhash": _dedup_minhash_oracle(),
         "dedup_ngram_jaccard": _dedup_minhash_oracle(),
@@ -2179,9 +1900,6 @@ SELECT o.o_orderpriority,
 FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
 GROUP BY o.o_orderpriority
 """,
-        "dedup_embedding": _dedup_embedding_oracle(),
-        "dedup_embedding_lsh": _dedup_embedding_oracle(),
-        "similarity_topk": _similarity_topk_oracle(),
         "textstats": _textstats_oracle(),
         "vocab_topk": _vocab_topk_oracle(),
         "quality_quantiles": _quality_quantiles_oracle(),
@@ -2445,17 +2163,6 @@ SELECT doc_id, lang, n_tokens FROM c WHERE cum <= budget
             "case_id::INT AS case_id, output",
             "case_id, output",
         ),
-        "sketch_heavy_hitters": _sketch_heavy_hitters_oracle(),
-        "sketch_hll_distinct": _sketch_hll_oracle(),
-        "hypertable_rollup": """
-SELECT ((floor(epoch(ts))::BIGINT // 86400) * 86400)::BIGINT AS day_epoch,
-       event_type,
-       count(*)::BIGINT AS n_events,
-       sum(floor(value * 1000)::BIGINT)::BIGINT AS sum_v_milli,
-       min(floor(value * 1000)::BIGINT)::BIGINT AS min_v_milli,
-       max(floor(value * 1000)::BIGINT)::BIGINT AS max_v_milli
-FROM events GROUP BY 1, 2
-""",
         "events_window": """
 SELECT epoch(time_bucket(INTERVAL 1 HOUR, ts))::BIGINT AS window_epoch,
        event_type,
@@ -2564,7 +2271,6 @@ FROM d GROUP BY text
             "case_id, line_no, text",
         ),
         "dedup_simhash": _dedup_simhash_oracle(),
-        "similarity_ann": _similarity_ann_oracle(),
         **_optional_oracles(),
     }
 
@@ -2590,32 +2296,6 @@ def _dsir_select_oracle() -> str:
     return sql_dsir_select("documents", dsir_weights(tgt, raw), _DSIR_FRAC_PPM)
 
 
-def _dedup_semantic_oracle() -> str:
-    """Replay the distributed k-means on the doubled corpus, then
-    re-derive cluster assignment, guard, and carried-norm cosine pairs in
-    SQL (sql_semantic_dedup)."""
-    import duckdb
-    import numpy as np
-
-    from openccnet_spark.operators.similarity import (
-        ivf_centroids_replay,
-        sql_semantic_dedup,
-    )
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    base = duckdb.sql(
-        f"SELECT vec_id, embedding FROM '{sf_dir}/embeddings.parquet' ORDER BY vec_id"
-    ).fetchall()
-    ids = [r[0] for r in base] + [r[0] + 100000 for r in base]
-    vecs = [list(r[1]) for r in base] * 2
-    centroids = ivf_centroids_replay(ids, np.array(vecs, dtype=np.float64))
-    src = (
-        "(SELECT vec_id, embedding FROM embeddings "
-        "UNION ALL SELECT vec_id + 100000, embedding FROM embeddings) e"
-    )
-    return sql_semantic_dedup(src, centroids, threshold_milli=990)
-
-
 def _optional_oracles() -> dict[str, str]:
     """Oracles whose BUILDERS need local data (the IVF centroids come from
     the sf0.01 parquet itself). If that read fails — fixtures elsewhere,
@@ -2623,12 +2303,7 @@ def _optional_oracles() -> dict[str, str]:
     check) instead of poisoning every other oracle."""
     out: dict[str, str] = {}
     for name, builder in (
-        ("similarity_ivf", _similarity_ivf_oracle),
-        ("similarity_ivf_sampled", lambda: _similarity_ivf_oracle(sample_mod=4)),
-        ("dedup_semantic", _dedup_semantic_oracle),
         ("dsir_select", _dsir_select_oracle),
-        ("similarity_recall", _similarity_recall_oracle),
-        ("similarity_recall_planted", _similarity_recall_planted_oracle),
         ("quality_classifier", _quality_classifier_oracle),
         ("bpe_train", _bpe_train_oracle),
         ("bpe_tokenize", _bpe_tokenize_oracle),
@@ -2755,55 +2430,6 @@ FROM s
 """
 
 
-def _similarity_recall_planted_oracle() -> str:
-    """Replays ANN + IVF over the planted corpus (original vectors plus
-    zeroed-last-element copies at vec_id+100000 — element replacement, so
-    the perturbed float32 arrays are bit-identical across engines) and
-    pins the recall floor: ``floor_met`` is the LITERAL true, so a missed
-    planted neighbor on the Spark side hash-mismatches instead of being
-    silently reported as lower recall."""
-    planted = (
-        "SELECT vec_id, embedding FROM embeddings "
-        "UNION ALL "
-        "SELECT vec_id + 100000 AS vec_id, embedding[1:63] || [0.0::FLOAT] AS embedding "
-        "FROM embeddings"
-    )
-    ann = _similarity_ann_oracle(src="p")
-    ivf = _similarity_ivf_oracle(src="p", planted=True)
-    return f"""
-WITH p AS ({planted}),
-ann AS (SELECT query_id, neighbor_id FROM ({ann})),
-ivf AS (SELECT query_id, neighbor_id FROM ({ivf}))
-SELECT v.query_id::BIGINT AS query_id,
-       coalesce(max(CASE WHEN a.neighbor_id = v.query_id + 100000 THEN 1 END), 0)::BIGINT AS ann_hit,
-       coalesce(max(CASE WHEN i.neighbor_id = v.query_id + 100000 THEN 1 END), 0)::BIGINT AS ivf_hit,
-       TRUE AS floor_met
-FROM (VALUES (0), (1), (2), (3), (4)) v(query_id)
-LEFT JOIN ann a ON a.query_id = v.query_id
-LEFT JOIN ivf i ON i.query_id = v.query_id
-GROUP BY v.query_id
-"""
-
-
-def _similarity_recall_oracle() -> str:
-    """Recall@5 of the ANN and IVF indexes vs the exact top-k, rebuilt
-    entirely in DuckDB from the three underlying oracles. A left join from
-    the exact set counts the non-null (hit) approximate neighbors; top-k
-    outputs are unique per (query_id, neighbor_id), so no fan-out."""
-    return f"""
-WITH exact AS (SELECT query_id, neighbor_id FROM ({_similarity_topk_oracle()})),
-ann AS (SELECT query_id, neighbor_id FROM ({_similarity_ann_oracle()})),
-ivf AS (SELECT query_id, neighbor_id FROM ({_similarity_ivf_oracle()}))
-SELECT e.query_id,
-       floor(count(a.neighbor_id) * 1000 / 5)::BIGINT AS ann_recall_milli,
-       floor(count(i.neighbor_id) * 1000 / 5)::BIGINT AS ivf_recall_milli
-FROM exact e
-LEFT JOIN ann a ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-LEFT JOIN ivf i ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-GROUP BY e.query_id
-"""
-
-
 def _values_oracle(rows: list, select: str, names: str) -> str:
     formatted = ", ".join(
         "(" + ", ".join(_sq(v) if isinstance(v, str) else str(v) for v in row) + ")"
@@ -2834,12 +2460,6 @@ SELECT ([{', '.join(zhos)}])[pool_idx + 1]::INT AS zho,
        count(*) AS n_turns
 FROM t GROUP BY 1
 """
-
-
-def _sketch_heavy_hitters_oracle() -> str:
-    from openccnet_spark.operators.sketch import sql_heavy_hitters
-
-    return sql_heavy_hitters()
 
 
 def _conv_fold_oracle(sf_dir_sf: str) -> str:
@@ -2902,18 +2522,6 @@ def _conv_render_oracle(sf_dir_sf: str) -> str:
     return sql_render_chat_template(f"({sql_fold_tool_turns(t)}) folded")
 
 
-def _sketch_hll_oracle() -> str:
-    """Direct (unmerged) register file from ALL words — pins the Spark
-    side's two-half merge as union-equivalent."""
-    from openccnet_spark.operators.hll import sql_hll_histogram
-
-    words = (
-        "(SELECT w FROM (SELECT unnest(string_split(coalesce(text, ''), ' ')) AS w"
-        " FROM documents) u WHERE w <> '') s"
-    )
-    return sql_hll_histogram("w", words)
-
-
 def _passage_oracle() -> str:
     """Naive window form of passage dedup over the doubled corpus."""
     from openccnet_spark.operators.passages import sql_passage_dedup
@@ -2939,27 +2547,6 @@ FROM documents WHERE doc_id % 3 = 1
 UNION ALL
 SELECT 'current_v3', count(*)::BIGINT, {digest}
 FROM documents WHERE doc_id % 3 = 2
-"""
-
-
-def _decontaminate_semantic_oracle() -> str:
-    """Brute-force cosine join of the same corpus/eval split."""
-    from openccnet_spark.operators.similarity import sql_cosine
-
-    cos = sql_cosine("c.embedding", "ev.embedding")
-    return f"""
-WITH ev AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 37 = 5),
-c AS (
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 37 <> 5
-  UNION ALL SELECT vec_id + 100000, embedding FROM ev
-),
-p AS (
-  SELECT c.vec_id, floor({cos} * 1000)::BIGINT AS cos_milli
-  FROM c, ev
-  WHERE floor({cos} * 1000) >= 990
-)
-SELECT vec_id, count(*)::BIGINT AS n_matches, max(cos_milli)::BIGINT AS max_cos_milli
-FROM p GROUP BY vec_id
 """
 
 
@@ -3188,166 +2775,6 @@ SELECT DISTINCT a.doc_id AS a, b.doc_id AS b,
 FROM surv a JOIN surv b ON a.band_i = b.band_i AND a.band_v = b.band_v
                        AND a.doc_id < b.doc_id
 WHERE bit_count(xor(a.sig, b.sig)) <= 3
-"""
-
-
-def _similarity_ann_oracle(src: str = "embeddings") -> str:
-    """The ANN bucket fold, replayed exactly in DuckDB: the hyperplanes are
-    deterministic float64 literals and each projection is the same
-    left-to-right double fold as the Spark expression (cf. ``sql_dot``), so
-    sign bits — and therefore candidate buckets — match bit-for-bit.
-    ``src``: the (vec_id, embedding) relation to index — a view name or a
-    CTE name (the planted-recall oracle passes its planted corpus)."""
-    from openccnet_spark.operators.similarity import (
-        N_HYPERPLANES,
-        N_TABLES,
-        _hyperplanes,
-        sql_cosine,
-    )
-
-    planes = _hyperplanes(64)
-
-    def key_expr(t: int) -> str:
-        bits = []
-        for j in range(N_HYPERPLANES):
-            terms = " + ".join(
-                f"embedding[{i + 1}]::DOUBLE * {float(planes[t, j, i])!r}"
-                for i in range(64)
-            )
-            bits.append(f"(CASE WHEN ({terms}) >= 0 THEN {1 << j} ELSE 0 END)")
-        return "(" + " + ".join(bits) + ")"
-
-    keys = ",\n         ".join(f"{key_expr(t)} AS k{t}" for t in range(N_TABLES))
-    bucket_match = " OR ".join(f"q.k{t} = c.k{t}" for t in range(N_TABLES))
-    cos = sql_cosine("qv", "nv")
-    return f"""
-WITH b AS (
-  SELECT vec_id, embedding,
-         {keys}
-  FROM {src}
-), cand AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         q.embedding AS qv, c.embedding AS nv
-  FROM b q JOIN b c ON q.vec_id <> c.vec_id
-  WHERE q.vec_id IN (0, 1, 2, 3, 4) AND ({bucket_match})
-), s AS (
-  SELECT query_id, neighbor_id, floor({cos} * 1000)::BIGINT AS cos_milli FROM cand
-), r AS (
-  SELECT query_id, neighbor_id, cos_milli,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_milli DESC, neighbor_id) AS rank
-  FROM s
-)
-SELECT query_id, neighbor_id, cos_milli, rank::INT AS rank FROM r WHERE rank <= 5
-"""
-
-
-def _similarity_ivf_oracle(
-    src: str = "embeddings", planted: bool = False, sample_mod: int = 1
-) -> str:
-    """Rebuild the IVF index in DuckDB: the centroids come from
-    `ivf_centroids_replay` — the bit-exact numpy replay of the DISTRIBUTED
-    trainer (quantized order-independent int sums + fold-ordered per-row
-    arithmetic); each per-centroid dot in the SQL is the same
-    left-to-right fold, and cluster/probe selection uses the same
-    first-max / fewer-than-nprobe rules — so candidates and the final
-    top-k value-match."""
-    import duckdb
-    import numpy as np
-
-    from openccnet_spark.operators.similarity import (
-        IVF_CLUSTERS,
-        IVF_NPROBE,
-        ivf_centroids_replay,
-        sql_cosine,
-    )
-
-    # the driver registers its views over sf0.01; the training corpus MUST
-    # come from the same tables the views read or the oracle is silently
-    # wrong rather than omitted. SPARK_GRAFT_ORACLE_SF_DIR re-points both
-    # when the comparison runs against a different scale factor.
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = f"{sf_dir}/embeddings.parquet"
-    base = duckdb.sql(
-        f"SELECT vec_id, embedding FROM '{path}' ORDER BY vec_id"
-    ).fetchall()
-    ids = [r[0] for r in base]
-    vecs = [list(r[1]) for r in base]
-    if planted:
-        # replay training over the PLANTED corpus (originals +
-        # zeroed-last-element copies at vec_id+100000)
-        ids = ids + [i + 100000 for i in ids]
-        vecs = vecs + [v[:63] + [0.0] for v in vecs]
-    centroids = ivf_centroids_replay(
-        ids, np.array(vecs, dtype=np.float64), sample_mod=sample_mod
-    )
-
-    def dot(i: int) -> str:
-        terms = " + ".join(
-            f"embedding[{d + 1}]::DOUBLE * {float(centroids[i, d])!r}" for d in range(64)
-        )
-        return f"({terms})"
-
-    ds = ",\n         ".join(dot(i) for i in range(IVF_CLUSTERS))
-    cos = sql_cosine("qv", "nv")
-    return f"""
-WITH b AS (
-  SELECT vec_id, embedding,
-         list_value({ds}) AS ds
-  FROM {src}
-), t AS (
-  SELECT vec_id, embedding, ds, list_indexof(ds, list_max(ds)) AS cluster FROM b
-), q AS (
-  SELECT t.vec_id AS query_id, t.embedding AS qv, g.j AS cluster
-  FROM t, generate_series(1, {IVF_CLUSTERS}) AS g(j)
-  WHERE t.vec_id IN (0, 1, 2, 3, 4)
-    AND len(list_filter(t.ds, x -> x > t.ds[g.j])) < {IVF_NPROBE}
-), cand AS (
-  SELECT DISTINCT q.query_id, q.qv, c.vec_id AS neighbor_id, c.embedding AS nv
-  FROM q JOIN t c ON q.cluster = c.cluster
-  WHERE q.query_id <> c.vec_id
-), s AS (
-  SELECT query_id, neighbor_id, floor({cos} * 1000)::BIGINT AS cos_milli FROM cand
-), r AS (
-  SELECT query_id, neighbor_id, cos_milli,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_milli DESC, neighbor_id) AS rank
-  FROM s
-)
-SELECT query_id, neighbor_id, cos_milli, rank::INT AS rank FROM r WHERE rank <= 5
-"""
-
-
-def _dedup_embedding_oracle() -> str:
-    from openccnet_spark.operators.similarity import sql_cosine
-
-    cos = sql_cosine("a.embedding", "b.embedding")
-    return f"""
-WITH e AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL SELECT vec_id + 100000, embedding FROM embeddings
-)
-SELECT a.vec_id AS a, b.vec_id AS b,
-       floor({cos} * 1000)::BIGINT AS cos_milli
-FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE floor({cos} * 1000) >= 990
-"""
-
-
-def _similarity_topk_oracle() -> str:
-    from openccnet_spark.operators.similarity import sql_cosine
-
-    cos = sql_cosine("qv", "nv")
-    return f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-           WHERE vec_id IN (0, 1, 2, 3, 4)),
-c AS (SELECT vec_id AS neighbor_id, embedding AS nv FROM embeddings),
-s AS (SELECT query_id, neighbor_id, floor({cos} * 1000)::BIGINT AS cos_milli
-      FROM q JOIN c ON query_id <> neighbor_id),
-r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_milli DESC, neighbor_id ASC) AS rank
-      FROM s)
-SELECT query_id, neighbor_id, cos_milli, rank::INT AS rank FROM r WHERE rank <= 5
 """
 
 

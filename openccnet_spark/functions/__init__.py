@@ -60,6 +60,19 @@ def _freeze_custom(custom: list | None) -> tuple | None:
     return tuple((s, m, t) for s, m, t in custom)
 
 
+def _map_udf(row_fn, return_type=StringType()):
+    """Single-column pandas UDF applying ``row_fn()`` to every non-NULL
+    row; NULL stays NULL. ``row_fn`` runs once per Arrow batch on the
+    worker, so it can fetch the worker-cached Converter."""
+
+    @F.pandas_udf(return_type)
+    def _map(s: pd.Series) -> pd.Series:
+        f = row_fn()
+        return s.map(lambda t: f(t) if t is not None else None)
+
+    return _map
+
+
 def convert_udf(
     config: str = "t2s",
     punct: bool = False,
@@ -76,13 +89,10 @@ def convert_udf(
     """
     key = _freeze_custom(custom)
 
-    @F.pandas_udf(StringType())
-    def _convert(s: pd.Series) -> pd.Series:
+    def row_fn():
         cc = _worker_converter(key, bundle_path)
 
         def one(text):
-            if text is None:
-                return None
             if normalize_compat:
                 text = cc.normalize_compat(text)
             text = cc.convert(text, config, punct, preserve_ids)
@@ -90,9 +100,9 @@ def convert_udf(
                 text = cc.detofu(text, detofu_level)
             return text
 
-        return s.map(one)
+        return one
 
-    return _convert
+    return _map_udf(row_fn)
 
 
 def pipeline_struct_udf(
@@ -217,19 +227,6 @@ def convert_cols_udf():
     return _convert
 
 
-def _map_udf(row_fn, return_type=StringType()):
-    """Single-column pandas UDF applying ``row_fn()`` to every non-NULL
-    row; NULL stays NULL. ``row_fn`` runs once per Arrow batch on the
-    worker, so it can fetch the worker-cached Converter."""
-
-    @F.pandas_udf(return_type)
-    def _map(s: pd.Series) -> pd.Series:
-        f = row_fn()
-        return s.map(lambda t: f(t) if t is not None else None)
-
-    return _map
-
-
 def st_udf():
     """O10 ``St`` char-only conversion."""
     return _map_udf(lambda: _worker_converter().st)
@@ -269,16 +266,13 @@ def detofu_udf(level: int = 0, custom_text: str | None = None, custom_pairs: dic
     # insertion order (sorting would silently change collision winners)
     frozen_pairs = tuple(custom_pairs.items()) if custom_pairs else None
 
-    @F.pandas_udf(StringType())
-    def _detofu(s: pd.Series) -> pd.Series:
+    def row_fn():
         cc = _worker_converter()
         if custom_text is None and frozen_pairs is None:
-            fn = lambda t: cc.detofu(t, level)  # noqa: E731
-        else:
-            fn = _worker_detofu_map(cc, level, custom_text, frozen_pairs).convert
-        return s.map(lambda t: fn(t) if t is not None else None)
+            return lambda t: cc.detofu(t, level)
+        return _worker_detofu_map(cc, level, custom_text, frozen_pairs).convert
 
-    return _detofu
+    return _map_udf(row_fn)
 
 
 def _worker_detofu_map(cc, level: int, custom_text, frozen_pairs):

@@ -1,6 +1,6 @@
 """Deduplication operators for training-data pipelines.
 
-Four families, each a composition of DataFrame ops (shuffle-conscious):
+Three families, each a composition of DataFrame ops (shuffle-conscious):
 
 * **Exact** — hash-groupBy on the text (or a normalized form). One shuffle
   on the group key; at 100 TB add a first pass grouping on a 64-bit text
@@ -14,7 +14,6 @@ Four families, each a composition of DataFrame ops (shuffle-conscious):
 * **SimHash** — 60-bit md5-based signature (15 hex chars, cross-engine
   reproducible), near-dup iff Hamming distance <= k on 4 x 15-bit
   pigeonhole bands; same candidate-join shape.
-* **Embedding cosine** — see ``similarity.py``; near-dup = cos >= threshold.
 
 All hash functions are crc32-based and deterministic (NEVER Python's
 ``hash``, which is salted per process).

@@ -7,11 +7,10 @@ quality_score_milli >= QM_TEACHER_MILLI``) labels a sample of the corpus,
 and a cheap linear student is distilled from it so the full 100 TB pass
 costs one JVM-side integer dot product per document.
 
-Training follows the engine's determinism discipline (see
-``similarity.ivf_train_distributed``): every cross-partition reduction is
-an order-free int64 sum, so the learned weights are bit-identical at any
-partitioning/cluster size and exactly replayable in numpy for the DuckDB
-oracle:
+Training follows the engine's determinism discipline: every
+cross-partition reduction is an order-free int64 sum, so the learned
+weights are bit-identical at any partitioning/cluster size and exactly
+replayable in numpy for the DuckDB oracle:
 
 1. **Init — one-pass integer-EXACT normal equations.** Features are
    integers (32 hashed unigram counts + 3 milli-scaled surface ratios +

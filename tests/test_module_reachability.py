@@ -1,0 +1,91 @@
+"""Every package module must be reachable from a real entry point.
+
+A static walk (no Spark, nothing imported): start at the CLI, the Spark job
+scripts, the benchmark, the tools and the driver contract, follow every
+``import`` / ``from ... import`` statement — module-level or function-local,
+absolute or relative — through repo-local files, and assert that each
+``openccnet_spark/**/*.py`` module is reached. A module that only its own
+tests import is dead code; deleting a feature must take its modules along.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = "openccnet_spark"
+
+
+def _module_name(path: Path) -> str:
+    parts = list(path.relative_to(ROOT).with_suffix("").parts)
+    if parts[-1] == "__init__":
+        parts.pop()
+    return ".".join(parts)
+
+
+def _local_file(name: str) -> Path | None:
+    base = ROOT.joinpath(*name.split("."))
+    for cand in (base.with_suffix(".py"), base / "__init__.py"):
+        if cand.is_file():
+            return cand
+    return None
+
+
+def _with_parents(name: str) -> list[str]:
+    """Importing ``a.b.c`` also executes ``a`` and ``a.b``."""
+    parts = name.split(".")
+    return [".".join(parts[: i + 1]) for i in range(len(parts))]
+
+
+def _imports(path: Path) -> set[str]:
+    """Module names ``path`` imports anywhere in its body."""
+    name = _module_name(path)
+    package = name if path.name == "__init__.py" else name.rpartition(".")[0]
+    found: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                found.update(_with_parents(alias.name))
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                anchor = package.split(".")
+                anchor = anchor[: len(anchor) - (node.level - 1)]
+                base = ".".join(anchor + ([node.module] if node.module else []))
+            else:
+                base = node.module
+            found.update(_with_parents(base))
+            # `from pkg import sub` imports the submodule when one exists
+            found.update(f"{base}.{alias.name}" for alias in node.names)
+    return found
+
+
+def _roots() -> list[Path]:
+    roots = [ROOT / PACKAGE / "cli.py", ROOT / PACKAGE / "__main__.py"]
+    roots += sorted((ROOT / "jobs").glob("*.py"))
+    roots += sorted((ROOT / "perfbench").glob("*.py"))  # perfbench/tests/ is not a root
+    roots += sorted((ROOT / "tools").glob("*.py"))
+    roots.append(ROOT / "__spark_entry__.py")
+    return roots
+
+
+def _reached() -> set[str]:
+    seen: set[str] = set()
+    todo = [_module_name(p) for p in _roots()]
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        path = _local_file(name)
+        if path is None:
+            continue  # stdlib / third-party, or a name imported from a module
+        todo.extend(_imports(path) - seen)
+    return seen
+
+
+def test_every_package_module_is_reachable():
+    modules = {_module_name(p) for p in (ROOT / PACKAGE).rglob("*.py")}
+    unreached = sorted(modules - _reached())
+    assert not unreached, f"modules no entry point imports: {unreached}"
+

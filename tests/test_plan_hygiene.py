@@ -40,16 +40,6 @@ def test_broadcast_join_broadcasts_the_dimension(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_cosine_topk_broadcasts_queries_never_corpus(spark):
-    """similarity_topk must broadcast the QUERY set over a nested-loop
-    join — replicating the corpus is impossible at 100 TB."""
-    df = entry_mod.queries()["similarity_topk"](spark, SF_DIR)
-    plan = _plan(df)
-    assert "BroadcastNestedLoopJoin BuildLeft" in plan.replace(
-        "BroadcastNestedLoopJoin BuildRight", ""
-    ) or "BuildLeft" in plan
-
-
 def test_lsh_guard_is_not_a_sort_window(spark):
     """The oversized-bucket guard must be an aggregate + anti-join, never
     a Window.partitionBy(band_key) — the window sort-shuffles every
@@ -100,32 +90,6 @@ def test_quality_quantiles_has_no_window(spark):
     assert "Window" not in plan
     # the histogram must be a real two-phase aggregate (map-side combined)
     assert plan.count("HashAggregate") >= 2
-
-
-def test_ann_candidate_distinct_carries_no_vectors(spark):
-    """The candidate-dedup distinct in the ANN/LSH family must key on
-    scalars only (ids + cos_milli): a distinct keyed on the embedding
-    arrays pushes ~1 KB of vector per candidate row through its hash
-    exchange — ~50x the bytes of the ids (the r03 bench regression).
-    A distinct is a HashAggregate with functions=[]; its exchange output
-    equals its keys, so scalar keys <=> scalar exchange."""
-    import re
-
-    for name in (
-        "similarity_ann",
-        "similarity_ivf",
-        "dedup_embedding_lsh",
-        "decontaminate_semantic",
-    ):
-        plan = _plan(entry_mod.queries()[name](spark, SF_DIR), "simple")
-        distincts = re.findall(
-            r"HashAggregate\(keys=\[([^\]]*)\], functions=\[\]", plan
-        )
-        assert distincts, f"{name}: expected a candidate-dedup distinct"
-        for keys in distincts:
-            assert not re.search(r"\b(qv|nv|va|vb|embedding)#", keys), (
-                f"{name}: distinct keyed on a vector column: [{keys}]"
-            )
 
 
 def test_salted_join_carries_salt_in_join_keys(spark):

@@ -53,15 +53,28 @@ def test_generator_duckdb_matches_python():
 
 def test_convert_udf_matches_reference(spark):
     cc = Converter()
-    texts = [b * r for b, r in POOL] + ["幾千隻", None]
+    # one compatibility ideograph and one DeTofu-mapped character, so the
+    # normalize_compat and detofu_level flags each change the output
+    compat = chr(next(iter(cc.bundle.compat_table)))
+    tofu = chr(next(iter(cc.bundle.detofu_table(0))))
+    texts = [b * r for b, r in POOL] + ["幾千隻", compat, tofu, None]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    for config, punct in [("t2s", False), ("s2t", True), ("s2twp", False)]:
-        out = df.withColumn("c", convert_udf(config, punct)("text")).collect()
+    for config, punct, flags in [
+        ("t2s", False, {}),
+        ("s2t", True, {}),
+        ("s2twp", False, {}),
+        ("t2s", False, {"normalize_compat": True, "detofu_level": 0}),
+    ]:
+        out = df.withColumn("c", convert_udf(config, punct, **flags)("text")).collect()
         for row in out:
-            expected = None if row.text is None else cc.convert(
-                cc.normalize_compat(row.text), config, punct
-            )
-            assert row.c == expected, (config, row.text[:30] if row.text else None)
+            expected = row.text
+            if expected is not None:
+                if flags.get("normalize_compat"):
+                    expected = cc.normalize_compat(expected)
+                expected = cc.convert(expected, config, punct)
+                if flags.get("detofu_level") is not None:
+                    expected = cc.detofu(expected, flags["detofu_level"])
+            assert row.c == expected, (config, flags, row.text[:30] if row.text else None)
 
 
 def test_st_and_zho_check_udfs(spark):

@@ -1,12 +1,12 @@
-"""Tests for the training-data operators: dedup, similarity, textstats,
-multimodal plumbing."""
+"""Tests for the training-data operators: dedup, connected components,
+textstats, multimodal plumbing, encrypted PDF conversion."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from openccnet_spark.operators import dedup, multimodal, similarity, textstats
+from openccnet_spark.operators import dedup, multimodal, textstats
 
 SF = "/root/testdata/sf0.001"
 
@@ -14,11 +14,6 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet").cache()
-
-
-@pytest.fixture(scope="module")
-def embs(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
 
 
 def test_exact_duplicates(spark, docs):
@@ -62,47 +57,6 @@ def test_simhash_near_duplicates(spark, docs):
     # operator contract is "very close texts", not MinHash-style Jaccard)
     assert len(planted & found) >= 0.75 * n
     assert all(r.hamming <= 3 for r in pairs)
-
-
-def test_cosine_topk_self_similarity(spark, embs):
-    doubled = embs.unionByName(
-        embs.withColumn("vec_id", F.col("vec_id") + 100000)
-    )
-    out = similarity.cosine_topk(doubled, query_ids=[0, 1, 2], k=3).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r.query_id, []).append(r)
-    for q, rows in by_q.items():
-        rows.sort(key=lambda r: r.rank)
-        # the exact copy is the nearest neighbour with cos == 1.0
-        assert rows[0].neighbor_id == q + 100000
-        assert rows[0].cos_milli == 1000
-
-
-def test_lsh_ann_finds_planted_neighbors(spark, embs):
-    # ANN's contract is near-duplicate retrieval: a true close neighbour
-    # (cos ~ 1.0) must land in the same bucket. Random-noise nearest
-    # neighbours (cos ~ 0.45) are NOT recoverable by hyperplane LSH and we
-    # do not claim them.
-    doubled = embs.unionByName(embs.withColumn("vec_id", F.col("vec_id") + 100000))
-    approx = similarity.lsh_ann_topk(doubled, query_ids=[0, 1, 2, 3, 4], k=1).collect()
-    top = {r.query_id: (r.neighbor_id, r.cos_milli) for r in approx}
-    for q in [0, 1, 2, 3, 4]:
-        assert top[q] == (q + 100000, 1000), top
-
-
-def test_embedding_near_duplicates(spark, embs):
-    doubled = embs.unionByName(
-        embs.withColumn("vec_id", F.col("vec_id") + 100000)
-    )
-    out = dedup_pairs = similarity.embedding_near_duplicates(doubled, threshold_milli=990)
-    rows = out.collect()
-    n = embs.count()
-    planted = {(i, i + 100000) for i in range(n)}
-    found = {(r.a, r.b) for r in rows}
-    assert planted <= found
-    # random 64-dim vectors are nowhere near cos >= 0.99
-    assert found == planted
 
 
 def test_textstats_consistency(spark, docs):
@@ -186,79 +140,6 @@ def test_simhash_banded_oracle_equals_brute():
     assert sorted(banded) == sorted(brute)
 
 
-def test_ivf_finds_planted_neighbors(spark, embs):
-    """IVF's contract mirrors LSH-ANN: an exact copy lands in the same
-    k-means cell (identical vector -> identical cluster), so top-1 must be
-    the planted duplicate with cos == 1.0."""
-    doubled = embs.unionByName(embs.withColumn("vec_id", F.col("vec_id") + 100000))
-    approx = similarity.ivf_topk(doubled, query_ids=[0, 1, 2, 3, 4], k=1).collect()
-    top = {r.query_id: (r.neighbor_id, r.cos_milli) for r in approx}
-    for q in [0, 1, 2, 3, 4]:
-        assert top[q] == (q + 100000, 1000), top
-
-
-def test_ivf_centroids_replay_deterministic():
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    x = rng.normal(size=(300, 64))
-    ids = np.arange(300)
-    a = similarity.ivf_centroids_replay(ids, x.copy())
-    b = similarity.ivf_centroids_replay(ids, x.copy())
-    assert (a == b).all()
-    # unit-norm centroids
-    assert np.allclose(np.linalg.norm(a, axis=1), 1.0)
-
-
-def test_ivf_distributed_training_matches_replay(spark):
-    """The heart of the oracle contract: Spark's DISTRIBUTED trainer
-    (quantized int partial sums over an arbitrary partitioning) must be
-    BIT-identical to the numpy replay — on a corpus larger than the old
-    2,048-row driver sample, under different partition counts, and with a
-    sample_mod slice."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    n = 3000  # > the old bounded sample: training genuinely distributes
-    x = rng.normal(size=(n, 16)).astype(np.float32)
-    rows = [(i, x[i].tolist()) for i in range(n)]
-    for parts, mod in ((4, 1), (13, 1), (7, 3)):
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").repartition(
-            parts
-        )
-        got = similarity.ivf_train_distributed(
-            df, n_clusters=8, iters=4, sample_mod=mod
-        )
-        want = similarity.ivf_centroids_replay(
-            np.arange(n), x.astype(np.float64), n_clusters=8, iters=4, sample_mod=mod
-        )
-        assert got.shape == want.shape
-        assert (got == want).all(), f"parts={parts} mod={mod}"
-
-
-def test_ivf_small_corpus(spark):
-    """Fewer vectors than n_clusters must degrade to fewer cells, not throw
-    under ANSI element_at (code-review finding, round 2)."""
-    import numpy as np
-
-    rng = np.random.default_rng(3)
-    rows = [(i, rng.normal(size=8).tolist()) for i in range(6)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = similarity.ivf_topk(df, query_ids=[0, 1], k=2, n_clusters=16)
-    got = out.collect()
-    assert {r.query_id for r in got} <= {0, 1}
-    assert all(r.rank <= 2 for r in got)
-
-
-def test_lsh_near_duplicates_matches_bruteforce(spark, embs):
-    doubled = embs.unionByName(embs.withColumn("vec_id", F.col("vec_id") + 100000))
-    brute = {(r.a, r.b, r.cos_milli) for r in
-             similarity.embedding_near_duplicates(doubled, threshold_milli=990).collect()}
-    lsh = {(r.a, r.b, r.cos_milli) for r in
-           similarity.lsh_near_duplicates(doubled, threshold_milli=990).collect()}
-    assert lsh == brute and len(brute) == embs.count()
-
-
 def test_connected_components_chain_and_cliques(spark):
     """Min-label propagation: a 5-node chain (diameter 4), a triangle, and
     an isolated pair must each collapse to their minimum id."""
@@ -302,20 +183,6 @@ def test_canonical_documents_singletons_and_clusters(spark):
     assert rows[5].component == 5 and rows[6].component == 5
     assert [rows[i].is_canonical for i in (1, 2, 3, 5, 6)] == [True, False, False, True, False]
     assert rows[1].n_members == 3 and rows[5].n_members == 2
-
-
-def test_embedding_near_duplicates_bruteforce_guard(spark, embs):
-    """The brute-force near-dup is O(n^2) verification-only: it must raise
-    before building the cross join on production-sized input, and pass
-    through untouched below the guard (same contract as
-    ngram_jaccard_pairs_bruteforce)."""
-    with pytest.raises(ValueError, match="O\\(n\\^2\\)"):
-        similarity.embedding_near_duplicates(embs, guard_max_rows=10)
-    # below the guard: normal operation
-    out = similarity.embedding_near_duplicates(
-        embs.limit(5), threshold_milli=-10_000, guard_max_rows=10
-    )
-    assert out.count() == 10  # all C(5,2) pairs at an always-true threshold
 
 
 def test_star_components_match_propagation(spark):
