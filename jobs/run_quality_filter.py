@@ -24,17 +24,14 @@ import argparse
 import sys
 
 
-def _hadoop_path_exists(spark, p: str) -> bool:
-    """Existence on the filesystem the PATH itself resolves to (default FS
-    for relative/bare names) — what the executors will actually read, not
-    the driver's local disk. Falls back to os.path on any JVM-gateway
-    hiccup so a broken probe degrades to the old (driver-local) behavior
-    instead of failing the job."""
+def _exists(spark, p: str) -> bool:
+    """``path_exists`` on the cluster filesystem, falling back to the
+    driver's local disk on any JVM-gateway hiccup: here a wrong answer only
+    misroutes the input, which then fails loudly."""
+    from openccnet_spark.operators.metrics import path_exists
+
     try:
-        jvm = spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(p)
-        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(path))
+        return path_exists(spark, p)
     except Exception:
         return os.path.exists(p)
 
@@ -89,7 +86,7 @@ def main(argv=None) -> int:
             "." in _inp
             and "/" not in _inp
             and not _inp.lower().endswith((".parquet", ".orc", ".json", ".csv"))
-            and not _hadoop_path_exists(spark, _inp)
+            and not _exists(spark, _inp)
         )
     else:
         _is_table = args.input_kind == "table"

@@ -12,13 +12,30 @@ metrics". Mechanism:
   ``df.writeTo(tbl).overwritePartitions()``; this sandbox has no Iceberg
   runtime jars, so the same semantics run on parquet via
   ``spark.sql.sources.partitionOverwriteMode=dynamic``.
-* After the data commit, one row per completed bucket is appended to a
-  metrics table: ``(run_id, partition_id, turns_seen, kept, converted,
-  scrubbed, dropped_<rule>..., status)``. Metrics are written AFTER data:
-  a crash mid-run leaves buckets absent from the metrics table and they
-  are simply reprocessed on resume.
 * Resume = anti-join of all buckets against completed metrics rows
-  (``status = 'done'``), the SURVEY §2.2 "Resume" stage.
+  (``status = 'done'``), the SURVEY §2.2 "Resume" stage. The metrics
+  table is probed with Hadoop ``FileSystem.exists`` (``path_exists``):
+  absent means a first run; a table that exists but cannot be read raises.
+
+The commit path of ``checkpointed_quality_filter``, in order:
+
+1. The pipeline output is clustered by bucket (``repartition`` on
+   ``partition_id``, after the fused UDF so that stage keeps its
+   parallelism) and persisted. Each bucket lands in one task, so a batch
+   writes one data file per bucket present — without the clustering the
+   dynamic-partition writer opens one file per task x bucket.
+2. **Data commit.** One write action runs the pipeline, fills the cache
+   and commits the data with the dynamic partition overwrite.
+3. **Metrics commit.** One row per bucket written —
+   ``(partition_id, turns_seen, kept, converted, scrubbed,
+   dropped_<rule>..., run_id, status)`` — is aggregated from the cached
+   frame (already hash-partitioned: no exchange) and appended to the
+   metrics table; an ``Observation`` on that same append yields the
+   buckets processed. Nothing is read back from the data files.
+   Metrics land AFTER data: a crash between the two commits leaves those
+   buckets unmarked, and they are reprocessed (idempotently) on resume.
+4. The cached frame is released in a ``finally``, whether or not a
+   commit failed.
 
 The metrics counters are the analog of the reference's per-chunk
 accounting in its parallel convert path (``Opencc.cs:1246-1267``).
@@ -28,7 +45,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .quality import DROP_RULES
@@ -42,46 +59,32 @@ def with_partition_id(df: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
     )
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence of ``path`` on the Hadoop filesystem it resolves to (the
+    default FS for relative or bare names) — what the executors will read,
+    not the driver's local disk. FS errors propagate: there is no fallback
+    to ``os.path``, because a false "absent" for the metrics table would
+    reprocess every bucket and append duplicate lineage rows."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return bool(fs.exists(jpath))
+
+
 def completed_buckets(spark: SparkSession, metrics_path: str) -> set:
     """Buckets already marked done in the metrics table (empty if none).
 
-    Only the missing-table case (first run: the metrics path does not
-    exist yet) maps to "nothing done"; any OTHER read failure — transient
-    FS error, permissions, corrupt footer — must raise, or a resume would
-    silently reprocess every bucket of a multi-hour run and append
-    duplicate lineage rows."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = (
-            spark.read.parquet(metrics_path)
-            .filter(F.col("status") == "done")
-            .select("partition_id")
-            .distinct()
-            .collect()
-        )
-    except AnalysisException as exc:
-        # Prefer the structured error class (stable API contract) over
-        # message text, which Spark rewords across versions. Fall back to
-        # the known message shapes only when no class is exposed.
-        cond = None
-        for probe in ("getCondition", "getErrorClass"):
-            fn = getattr(exc, probe, None)
-            if fn is not None:
-                try:
-                    cond = fn()
-                except Exception:
-                    cond = None
-                if cond:
-                    break
-        # a non-matching structured class must still FALL THROUGH to the
-        # message probe: some Spark versions raise missing-path through a
-        # legacy error class whose message is the only stable signal
-        if cond == "PATH_NOT_FOUND" or (
-            "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc)
-        ):
-            return set()
-        raise
+    Only an absent table (first run) means "nothing done"; any failure to
+    read a table that exists — corrupt footer, permissions, a transient FS
+    error — raises, or a resume would silently reprocess every bucket."""
+    if not path_exists(spark, metrics_path):
+        return set()
+    rows = (
+        spark.read.parquet(metrics_path)
+        .filter(F.col("status") == "done")
+        .select("partition_id")
+        .distinct()
+        .collect()
+    )
     return {r.partition_id for r in rows}
 
 
@@ -115,6 +118,8 @@ def checkpointed_quality_filter(
     """Run the quality filter with bucket-level checkpoint-resume.
 
     Returns {"processed": [...buckets run now], "skipped": [...already done]}.
+    Each bucket is written by one task, so the data write runs at most
+    ``n_buckets`` tasks in parallel (see the module docstring).
     """
     from .pipeline import quality_filter
 
@@ -128,7 +133,7 @@ def checkpointed_quality_filter(
     # arithmetic. (A distinct-collect over the source to enumerate which
     # of <= n_buckets small integers hold data would cost a FULL extra
     # scan of the corpus; instead, which candidates actually had rows is
-    # read off the <= n_buckets-row metrics frame after the run.) A
+    # observed on the <= n_buckets-row metrics append after the run.) A
     # candidate with no source rows THIS run writes no metrics row and
     # stays pending — data for it arriving later is still processed.
     pending = sorted(set(range(n_buckets)) - done)
@@ -136,22 +141,34 @@ def checkpointed_quality_filter(
         return {"processed": [], "skipped": sorted(done)}
     pending_df = src.filter(F.col("partition_id").isin(pending)) if done else src
 
-    out = quality_filter(pending_df, **pipeline_kwargs)
-    # Data first (idempotent dynamic partition overwrite)...
-    out.write.mode("overwrite").partitionBy("partition_id").parquet(data_path)
-    # ...then the lineage/metrics commit marks the buckets done. Collect
-    # the tiny per-bucket frame ONCE (<= n_buckets rows) and append the
-    # collected rows, so the aggregation is not recomputed for the write.
-    written = spark.read.parquet(data_path).filter(
-        F.col("partition_id").isin(pending)
+    # One bucket per task: each bucket is written as one file, and the
+    # cached frame stays hash-partitioned on partition_id, so the metrics
+    # aggregate below needs no exchange.
+    out = (
+        quality_filter(pending_df, **pipeline_kwargs)
+        .repartition("partition_id")
+        .persist()
     )
-    m = bucket_metrics(written).withColumn("run_id", F.lit(run_id)).withColumn(
-        "status", F.lit("done")
-    )
-    m_rows = m.collect()
-    if m_rows:
-        spark.createDataFrame(m_rows, m.schema).write.mode("append").parquet(
-            metrics_path
+    try:
+        # Data first (idempotent dynamic partition overwrite); this one
+        # action runs the pipeline and fills the cache...
+        out.write.mode("overwrite").partitionBy("partition_id").parquet(data_path)
+        # ...then the lineage/metrics commit marks the buckets done, from
+        # the cache (no read-back); the observation yields which buckets had
+        # rows from the same append job.
+        m = (
+            bucket_metrics(out)
+            .withColumn("run_id", F.lit(run_id))
+            .withColumn("status", F.lit("done"))
         )
-    processed = sorted(r["partition_id"] for r in m_rows)
+        obs = Observation()
+        (
+            m.observe(obs, F.collect_list("partition_id").alias("processed"))
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(metrics_path)
+        )
+        processed = sorted(obs.get["processed"])
+    finally:
+        out.unpersist()
     return {"processed": processed, "skipped": sorted(done)}
