@@ -20,12 +20,18 @@ reference's conversion semantics exactly, in code points:
 * O13 ``DeTofu`` (``Opencc.cs:2350-2451``, DeTofu.cs).
 * O14 IDS preservation (``Opencc.cs:504-535,1338-1368``, IdsHelper.cs).
 
-Everything here is scalar Python — Spark integration wraps these in
+The greedy round has two implementations that are byte-identical by
+test: ``run_round_scalar``, a per-position Python loop over the merged
+table (the semantic ground truth, and the path short texts take), and
+``run_round_vectorized``, a trie walk over every position at once in
+numpy. ``run_round`` picks between them by text length. numpy is imported
+only when the vectorized path first runs. Spark integration wraps these in
 vectorized pandas UDFs (``openccnet_spark.functions``).
 """
 
 from __future__ import annotations
 
+import codecs
 import re
 
 from .dictionary import DictionaryBundle, RoundIndex, load_bundle
@@ -83,53 +89,179 @@ def is_complete_ids(s: str) -> bool:
 # --- O5: the greedy longest-match round --------------------------------------
 
 
+#: Texts shorter than this many code points take the scalar matcher: below
+#: it the fixed cost of the vectorized walk's numpy calls (a few hundred
+#: microseconds per round) loses. Measured crossover on a 4-vCPU x86 box:
+#: about 600 chars on dense Simplified text (s2t round), about 1000 on
+#: mostly-English agent turns (t2s).
+VECTOR_MIN_CHARS = 800
+
+#: The vectorized round works through the text in segments of this many
+#: start positions, which bounds its working arrays (a peak of about 3 MB
+#: on dense text). Python workers keep their heap's high-water mark, so
+#: this counts against their RSS.
+_SEGMENT = 1 << 15
+
+#: The greedy pass walks every 2**k-th chosen match in Python and fills in
+#: the steps between with vectorized gathers; k grows with the candidate
+#: count up to this cap (each step of k costs one gather over all
+#: candidates and halves the Python walk).
+_MAX_STRIDE_LOG2 = 5
+
+
 def run_round(text: str, rnd: RoundIndex, preserve_ids: bool = False) -> str:
-    """One conversion round over the whole string — the FAST path.
+    """One conversion round over the whole string.
 
-    Multi-char keys are matched by a compiled trie regex (leftmost scan,
-    longest key at each position — exactly the greedy semantics of
-    ``ConvertByUnionInto``); the stretches between phrase matches contain
-    only 1-char candidates, resolved by ``str.translate``. Both are C
-    loops: ~20-40x the scalar matcher on dense CJK text. The scalar
-    matcher below (``run_round_scalar``) is the semantic ground truth;
-    tests assert byte-equality between the two on goldens + random text.
-
-    IDS preservation routes to the scalar path (rare; gated by a cheap
-    operator scan, the analog of Opencc.cs:1194-1200).
+    Texts of ``VECTOR_MIN_CHARS`` code points or more take the vectorized
+    trie walk (``run_round_vectorized``); shorter ones, and IDS
+    preservation when the text holds an IDS operator (rare; gated by a
+    cheap operator scan, the analog of Opencc.cs:1194-1200), take the
+    scalar matcher ``run_round_scalar`` — the semantic ground truth the
+    vectorized path is tested byte-equal against.
     """
-    if not text or not rnd.convertible(text):
+    if len(text) < VECTOR_MIN_CHARS or (preserve_ids and contains_ids_operator(text)):
+        return run_round_scalar(text, rnd, preserve_ids)  # gates itself
+    if not rnd.convertible(text):
         return text
-    if preserve_ids and contains_ids_operator(text):
-        return run_round_scalar(text, rnd, preserve_ids=True)
-    pattern, singles, multi_lengths = rnd.fast
-    if pattern is None:
-        return text.translate(singles)
-    table = rnd.table
-    get = table.get
-    n = len(text)
-    out = []
-    append = out.append
-    last = 0  # everything before `last` is emitted
-    for m in pattern.finditer(text):
-        j = m.start()
-        if j < last:
-            continue  # consumed by a previous phrase match
-        lim = n - j
-        for length in multi_lengths[text[j]]:
-            if length <= lim:
-                v = get(text[j : j + length])
-                if v is not None:
-                    if j > last:
-                        append(text[last:j].translate(singles))
-                    append(v)
-                    last = j + length
-                    break
-        # no phrase match: char at j is handled by the next bulk translate
-    if last == 0:
-        return text.translate(singles)
-    if last < n:
-        append(text[last:].translate(singles))
-    return "".join(out)
+    return run_round_vectorized(text, rnd)
+
+
+def run_round_vectorized(text: str, rnd: RoundIndex) -> str:
+    """Greedy longest-match round as whole-array numpy passes.
+
+    1. Candidates: every position whose character starts a key walks the
+       trie (``RoundIndex.fast``) one level per step, all positions at
+       once; each records its deepest key node. The live set shrinks
+       geometrically with depth.
+    2. Greedy selection: from a candidate at ``s`` with key length ``L``
+       the scan resumes at the first candidate at or after ``s + L`` — a
+       successor function ``nxt``; the chosen matches are its orbit from
+       the first candidate, collected by pointer jumping (``nxt`` squared
+       up to ``_MAX_STRIDE_LOG2`` times) without a per-match Python step.
+    3. Output: single-character keys are translated everywhere through
+       the code table, then the chosen spans are overwritten with their
+       values (ragged gather from the value pool); when a value differs in
+       length from its key the unmatched characters are first shifted to
+       their output offsets.
+
+    The text is processed in segments of ``_SEGMENT`` start positions, so
+    the working arrays stay a few MB however long the text is; a segment
+    ends where its last chosen match ends, and the next resumes there.
+    """
+    ix = rnd.fast
+    if ix is None:
+        return run_round_scalar(text, rnd)
+    pieces = []
+    at, n = 0, len(text)
+    while at < n:
+        piece, at = _round_segment(ix, text, at, min(n, at + _SEGMENT))
+        pieces.append(piece)
+    return "".join(pieces)
+
+
+def _round_segment(ix, text: str, lo: int, hi: int) -> tuple:
+    """Convert the matches starting in ``text[lo:hi]``, given that the
+    greedy scan is at ``lo``. Returns the converted piece and the position
+    it covers up to (``hi``, or the end of a last match that runs past)."""
+    import numpy as np
+
+    seg = text[lo : hi + ix.max_depth - 1]  # lookahead for matches at hi - 1
+    cps = np.frombuffer(seg.encode("utf-32-le", "surrogatepass"), dtype=np.int32)
+    codes = np.zeros(len(seg) + ix.max_depth, dtype=ix.code_of.dtype)  # zero-padded
+    np.take(ix.code_of, cps, mode="clip", out=codes[: len(seg)])
+    width = hi - lo
+
+    # 1. candidates: the deepest key node of every start position
+    head = codes[:width]
+    nxt = np.arange(1, width + 1, dtype=np.int32)[(head != 0) & (head <= ix.n_first)]
+    node = head[nxt - 1].astype(np.uint32)  # nxt: the next character of each walk
+    best = np.zeros(width, dtype=np.uint32)
+    for depth in range(1, ix.max_depth + 1):
+        term = ix.val_len[node] >= 0
+        best[nxt[term] - depth] = node[term]
+        more = ix.kids[node]
+        nxt, node = nxt[more], node[more]
+        if not len(nxt):
+            break
+        node = ix.lookup(node, codes[nxt])
+        more = node != 0
+        nxt, node = nxt[more] + 1, node[more]
+    start = np.arange(width, dtype=np.int32)[best != 0]
+    node = best[start]
+    del head, best, nxt
+
+    # 2. greedy selection, 3. output
+    end = width
+    if len(start):
+        start, node = _greedy(ix, start, node, width)
+        end = max(width, int(start[-1] + ix.depth[node[-1]]))
+    out = ix.delta[codes[:end]]
+    out += cps[:end]
+    if len(start):
+        out = _write_values(ix, out, start, node)
+    return codecs.utf_32_le_decode(out, "surrogatepass")[0], lo + end
+
+
+def _greedy(ix, start, node, width: int) -> tuple:
+    """The greedy leftmost-longest matches among the candidates (``start``
+    ascending, each with its deepest key ``node``)."""
+    import numpy as np
+
+    m = len(start)
+    length = ix.depth[node]
+    # nxt[i]: the first candidate at or after the end of candidate i's key
+    # (m = none; absorbing), read off the running count of candidates
+    rank = np.zeros(width + ix.max_depth, dtype=np.int32)
+    rank[start + 1] = 1
+    np.cumsum(rank, out=rank)
+    nxt = np.empty(m + 1, dtype=np.int32)
+    nxt[:m] = rank[start + length]
+    nxt[m] = m
+    del rank
+    stride_log2 = min(_MAX_STRIDE_LOG2, m.bit_length() // 3)
+    jump = nxt
+    for _ in range(stride_log2):
+        jump = jump[jump]
+    heads = []
+    i = 0
+    while i < m:
+        heads.append(i)
+        i = jump.item(i)
+    steps = np.empty((1 << stride_log2, len(heads)), dtype=np.int32)
+    steps[0] = heads
+    for r in range(1, len(steps)):
+        steps[r] = nxt[steps[r - 1]]
+    chosen = np.zeros(m + 1, dtype=bool)
+    chosen[steps] = True
+    (k,) = np.nonzero(chosen[:m])
+    return start[k], node[k]
+
+
+def _write_values(ix, out, start, node):
+    """Overwrite the chosen key spans of ``out`` with their values."""
+    import numpy as np
+
+    length = ix.depth[node]
+    vlen = ix.val_len[node]
+    dst = start
+    if (vlen != length).any():
+        # shift the unmatched characters to their output offsets first
+        n = len(out)
+        cover = np.zeros(n + 1, dtype=np.int8)
+        cover[start] = 1
+        cover[start + length] -= 1
+        free = np.cumsum(cover[:n], dtype=np.int8) == 0
+        size = free.astype(np.int32)
+        size[start] = vlen
+        offset = np.cumsum(size, dtype=np.int32)
+        offset -= size
+        shifted = np.empty(int(offset[-1] + size[-1]), dtype=np.int32)
+        shifted[offset[free]] = out[free]
+        out, dst = shifted, offset[start]
+    before = np.cumsum(vlen, dtype=np.int32) - vlen
+    rel = np.arange(int(before[-1] + vlen[-1]), dtype=np.int32) - np.repeat(before, vlen)
+    out[np.repeat(dst, vlen) + rel] = ix.pool[np.repeat(ix.val_off[node], vlen) + rel]
+    return out
 
 
 def run_round_scalar(text: str, rnd: RoundIndex, preserve_ids: bool = False) -> str:
@@ -264,8 +396,9 @@ class Converter:
         once over the megastring — dictionary keys contain no NUL (keys
         are delimiter-free by dictgen audit and NUL-free by the lexicon
         line format), so no match can span the boundary and the split-back
-        is exact. Amortizes per-call overhead (regex setup, convertibility
-        scan) across the batch: ~1.15x on short transcript turns.
+        is exact. A batch of short texts thus takes the vectorized round
+        (``run_round_vectorized``) once instead of the scalar matcher per
+        text, and pays the per-call overhead once.
 
         Falls back to per-text conversion when ``preserve_ids`` (an IDS
         expression could otherwise consume the separator as an operand),

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import gzip
 import json
-import re
 from dataclasses import dataclass
 from functools import lru_cache
 from pathlib import Path
@@ -53,13 +52,12 @@ class RoundIndex:
     containing no convertible characters at all.
 
     Two execution paths share this index:
-    * the reference scalar matcher (``convert.run_round_scalar``) — the
-      semantic ground truth, used by tests;
-    * the compiled fast path: a trie regex over the multi-char keys
-      (longest-match by construction) + ``str.translate`` for the 1-char
-      keys — both C loops. Built lazily (regex compilation costs ~1 s for
-      the 50k-phrase S2T round) and cached per process, i.e. once per Spark
-      Python worker.
+    * the reference scalar matcher (``convert.run_round_scalar``) over
+      ``table`` and ``starters`` — the semantic ground truth, and the path
+      short texts take;
+    * the vectorized trie walk (``convert.run_round_vectorized``) over
+      ``fast``, a flat-array trie of the same keys (``TrieIndex``). Built
+      lazily and cached per process, i.e. once per Spark Python worker.
     """
 
     table: dict
@@ -70,41 +68,181 @@ class RoundIndex:
         return not self.starter_set.isdisjoint(text)
 
     @property
-    def fast(self):
-        ri = self.__dict__.get("_fast")
-        if ri is None:
-            ri = _build_fast_round(self.table)
-            object.__setattr__(self, "_fast", ri)
-        return ri
+    def fast(self) -> "TrieIndex | None":
+        if "_fast" not in self.__dict__:
+            object.__setattr__(self, "_fast", _build_fast_round(self.table))
+        return self.__dict__["_fast"]
 
 
-def _char_class(chars) -> str:
-    return "[" + "".join(re.escape(c) for c in sorted(chars)) + "]"
+#: the two multiplicative hashes of the cuckoo edge table (the odd 32-bit
+#: primes of xxHash32)
+_HASH = (0x9E3779B1, 0x85EBCA77)
+#: placement rounds before the edge table is rebuilt one size larger
+_CUCKOO_ROUNDS = 500
+#: one edge-table slot: the child node and the edge key (0 = empty)
+_SLOT = [("child", "<u4"), ("key", "<u4")]
 
 
-def _build_fast_round(table: dict):
-    """(starter_re, singles_translate, multi_lengths) for the fast path.
+@dataclass(frozen=True)
+class TrieIndex:
+    """A round's keys as a trie in flat numpy arrays.
 
-    ``starter_re`` is a single character class of every first char of a
-    multi-char key — CPython compiles a class to a bitmap, so scanning for
-    candidate phrase positions is a C loop. ``multi_lengths[c]`` lists the
-    candidate key lengths (descending) for probes at those positions.
-    Everything between candidates has only 1-char keys -> str.translate.
+    Every character that occurs in a key gets a dense *code* (0 = in no
+    key); characters that start a key get codes ``1..n_first`` and the
+    depth-1 trie node of such a character is its code. Deeper nodes are
+    numbered level by level. An edge ``parent -> child`` on the character
+    with code ``c`` has the 32-bit key ``parent * n_codes + c``; ``edges``
+    is a two-choice cuckoo hash table of ``(child, key)`` slots, so a
+    lookup is two gathers and no probe loop.
+
+    Single-character keys whose value is one code point are not in the
+    trie: ``delta[code]`` adds them as a code-point offset. Every other key
+    (multi-character, or a single character mapped to 0 or 2+ code points)
+    is a trie node with ``val_len >= 0``; its value is
+    ``pool[val_off : val_off + val_len]``.
     """
-    singles = {}
-    multi_lengths: dict = {}
-    for k in table:
-        if len(k) == 1:
-            singles[ord(k)] = table[k]
-        else:
-            c = k[0]
-            lens = multi_lengths.setdefault(c, set())
-            lens.add(len(k))
-    multi_lengths = {
-        c: tuple(sorted(lens, reverse=True)) for c, lens in multi_lengths.items()
-    }
-    pattern = re.compile(_char_class(multi_lengths)) if multi_lengths else None
-    return (pattern, singles, multi_lengths)
+
+    code_of: object  # cp -> code; the last entry (0) absorbs larger cps
+    n_first: int
+    n_codes: int
+    delta: object  # code -> single-char replacement minus the code point
+    kids: object  # node -> has children
+    val_len: object  # node -> value length, -1 if not a key
+    val_off: object  # node -> offset of the value in pool
+    pool: object  # every value's code points, int32
+    depth: object  # node -> depth, i.e. the length of its key
+    edges: object
+    hash_shift: object
+    max_depth: int
+
+    def lookup(self, parent, code):
+        """Child node of every ``(parent, code)`` pair (uint32); 0 where none."""
+        import numpy as np
+
+        q = parent.astype(np.uint32) * np.uint32(self.n_codes)
+        q += code
+        s0 = self.edges[(q * np.uint32(_HASH[0])) >> self.hash_shift]
+        s1 = self.edges[(q * np.uint32(_HASH[1])) >> self.hash_shift]
+        return np.where(s0["key"] == q, s0["child"], np.where(s1["key"] == q, s1["child"], 0))
+
+
+def _utf32(text: str):
+    """Code points of ``text`` as a uint32 view over its UTF-32 encoding."""
+    import numpy as np
+
+    return np.frombuffer(text.encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
+
+
+def _build_fast_round(table: dict) -> TrieIndex | None:
+    """Number the trie of ``table``'s keys level by level with ``np.unique``
+    over the edge keys and lay it out as a ``TrieIndex``; None if the edge
+    keys do not fit 32 bits (the round then runs the scalar matcher).
+
+    Transients stay int32/uint16 where they can: the worker heap keeps
+    the build's peak, so it counts against the Python workers' RSS."""
+    import numpy as np
+
+    klen = np.fromiter(map(len, table), dtype=np.int32, count=len(table))
+    vlen = np.fromiter(map(len, table.values()), dtype=np.int32, count=len(table))
+    kcp = _utf32("".join(table))
+    pool = _utf32("".join(table.values())).view(np.int32)
+    kstart = np.cumsum(klen, dtype=np.int32) - klen
+    vstart = np.cumsum(vlen, dtype=np.int32) - vlen
+    single = (klen == 1) & (vlen == 1)
+    (one,) = np.nonzero(single)
+    (trie,) = np.nonzero(~single)
+
+    first = np.unique(kcp[kstart[trie]])
+    rest = np.setdiff1d(kcp, first)
+    n_first, n_codes = len(first), len(first) + len(rest) + 1
+    code_of = np.zeros(int(kcp.max(initial=0)) + 2, dtype=np.uint16 if n_codes <= 1 << 16 else np.uint32)
+    code_of[first] = np.arange(1, n_first + 1)
+    code_of[rest] = np.arange(n_first + 1, n_codes)
+    del first, rest
+    delta = np.zeros(n_codes, dtype=np.int32)
+    src = kcp[kstart[one]].astype(np.int32)
+    delta[code_of[src]] = pool[vstart[one]] - src
+    del one, src, single
+
+    klen, kstart, vlen, vstart = klen[trie], kstart[trie], vlen[trie], vstart[trie]
+    codes = code_of[kcp]
+    del kcp, trie
+    node = codes[kstart].astype(np.int32)  # depth-1 node id == code of the first char
+    level_start = [1, n_first + 1]
+    edges = []
+    live = np.arange(len(node), dtype=np.int32)
+    for depth in range(2, int(klen.max(initial=1)) + 1):
+        live = live[klen[live] >= depth]
+        edge = node[live].astype(np.int64) * n_codes + codes[kstart[live] + depth - 1]
+        uniq, inv = np.unique(edge, return_inverse=True)
+        node[live] = level_start[-1] + inv
+        edges.append(uniq)
+        level_start.append(level_start[-1] + len(uniq))
+    del codes, live
+    n_nodes = level_start[-1]
+    if n_nodes * n_codes >= 1 << 32:
+        return None  # edge keys need more than 32 bits: scalar matcher only
+    # edges in node order: the child of edges[i] is node n_first + 1 + i
+    edges = np.concatenate([np.zeros(0, np.int64), *edges])
+
+    kids = np.zeros(n_nodes, dtype=bool)
+    kids[edges // n_codes] = True
+    val_len = np.full(n_nodes, -1, dtype=np.int8 if vlen.max(initial=0) < 128 else np.int32)
+    val_len[node] = vlen
+    val_off = np.zeros(n_nodes, dtype=np.int32)
+    val_off[node] = vstart
+    depth = np.repeat(np.arange(len(level_start)), np.diff(level_start, prepend=0))
+    depth = depth.astype(np.min_scalar_type(len(level_start)))
+    del node, klen, kstart, vlen, vstart
+
+    edges = edges.astype(np.uint32)
+    bits = max(4, (2 * len(edges)).bit_length())
+    while (owner := _cuckoo(edges, bits)) is None:
+        bits += 1
+    # slots from a list of the edges' slots whose last item, picked by the
+    # empty slots' owner -1, is empty
+    slots = np.zeros(len(edges) + 1, dtype=_SLOT)
+    slots["key"][:-1] = edges
+    slots["child"][:-1] = np.arange(n_first + 1, n_nodes)
+    del edges
+    table = slots[owner]
+    del slots, owner
+
+    return TrieIndex(
+        code_of=code_of, n_first=n_first, n_codes=n_codes, delta=delta,
+        kids=kids, val_len=val_len, val_off=val_off, pool=pool, depth=depth,
+        edges=table, hash_shift=np.uint32(32 - bits),
+        max_depth=len(level_start) - 1,
+    )
+
+
+def _cuckoo(keys, bits: int):
+    """Slot -> index into ``keys`` (-1 = empty) of a two-choice cuckoo
+    table with ``2**bits`` slots, or None if placement does not settle.
+
+    All homeless keys move at once: each claims its current choice of
+    slot, one claimant per slot wins and evicts the occupant, and the
+    losers and the evicted switch to their other choice. Which claimant
+    wins does not matter, so the winner is whichever write numpy makes
+    last, read back from the table (no sort)."""
+    import numpy as np
+
+    hashes = np.array(_HASH, dtype=np.uint32)
+    shift = np.uint32(32 - bits)
+    owner = np.full(1 << bits, -1, dtype=np.int32)
+    side = np.zeros(len(keys), dtype=np.intp)
+    pending = np.arange(len(keys), dtype=np.int32)
+    for _ in range(_CUCKOO_ROUNDS):
+        if not len(pending):
+            return owner
+        slot = (keys[pending] * hashes[side[pending]]) >> shift
+        previous = owner[slot]
+        owner[slot] = pending
+        won = owner[slot] == pending
+        evicted = previous[won]
+        pending = np.concatenate([pending[~won], evicted[evicted >= 0]])
+        side[pending] ^= 1
+    return None
 
 
 def build_round_index(dicts: list[dict]) -> RoundIndex:

@@ -73,6 +73,29 @@ def _map_udf(row_fn, return_type=StringType()):
     return _map
 
 
+def _convert_batch(cc, texts: list, config: str, punct: bool = False, preserve_ids: bool = False) -> list:
+    """``cc.convert_many`` over the non-NULL entries of ``texts`` — one
+    matcher pass per Arrow batch instead of one call per row; NULL stays
+    NULL."""
+    live = [t for t in texts if t is not None]
+    conv = iter(cc.convert_many(live, config, punct, preserve_ids))
+    return [None if t is None else next(conv) for t in texts]
+
+
+def _convert_grouped(cc, texts: list, configs: list, puncts: list) -> list:
+    """Per-row direction: one ``convert_many`` per distinct (config,
+    punct) in the batch; a NULL text or NULL config gives NULL."""
+    out = [None] * len(texts)
+    groups: dict = {}
+    for i, (t, c, p) in enumerate(zip(texts, configs, puncts)):
+        if t is not None and c is not None:
+            groups.setdefault((c, bool(p)), []).append(i)
+    for (config, punct), rows in groups.items():
+        for i, x in zip(rows, cc.convert_many([texts[i] for i in rows], config, punct)):
+            out[i] = x
+    return out
+
+
 def convert_udf(
     config: str = "t2s",
     punct: bool = False,
@@ -89,20 +112,18 @@ def convert_udf(
     """
     key = _freeze_custom(custom)
 
-    def row_fn():
+    @F.pandas_udf(StringType())
+    def _convert(s: pd.Series) -> pd.Series:
         cc = _worker_converter(key, bundle_path)
+        texts = s.tolist()
+        if normalize_compat:
+            texts = [None if t is None else cc.normalize_compat(t) for t in texts]
+        out = _convert_batch(cc, texts, config, punct, preserve_ids)
+        if detofu_level is not None:
+            out = [None if t is None else cc.detofu(t, detofu_level) for t in out]
+        return pd.Series(out, dtype=object)
 
-        def one(text):
-            if normalize_compat:
-                text = cc.normalize_compat(text)
-            text = cc.convert(text, config, punct, preserve_ids)
-            if detofu_level is not None:
-                text = cc.detofu(text, detofu_level)
-            return text
-
-        return one
-
-    return _map_udf(row_fn)
+    return _convert
 
 
 def pipeline_struct_udf(
@@ -171,21 +192,15 @@ def pipeline_struct_udf(
     def _run(s: pd.Series) -> pd.DataFrame:
         cc = _worker_converter(key)
         texts = s.tolist()  # plain-list iteration beats Series.__iter__
-        # batch the matcher: one megastring pass for the whole Arrow batch
-        # (convert_many) instead of a per-row call — same bytes, ~15% less
-        # matcher overhead on short turns
-        pending = [
-            (cc.normalize_compat(t) if normalize_compat else t)
-            for t in texts
-            if t is not None
-        ]
-        conv_iter = iter(cc.convert_many(pending, config, punct, preserve_ids))
+        norm = texts
+        if normalize_compat:
+            norm = [None if t is None else cc.normalize_compat(t) for t in texts]
         rows = []
-        for t in texts:
+        # t stays the raw text: an unchanged result travels as NULL below
+        for t, x in zip(texts, _convert_batch(cc, norm, config, punct, preserve_ids)):
             if t is None:
                 rows.append((None,) * len(cols))
                 continue
-            x = next(conv_iter)
             if detofu_level is not None:
                 x = cc.detofu(x, detofu_level)
             lang = detect_language(x)
@@ -217,12 +232,8 @@ def convert_cols_udf():
 
     @F.pandas_udf(StringType())
     def _convert(config: pd.Series, punct: pd.Series, text: pd.Series) -> pd.Series:
-        cc = _worker_converter()
-        out = [
-            None if t is None else cc.convert(t, c, bool(p))
-            for c, p, t in zip(config, punct, text)
-        ]
-        return pd.Series(out)
+        out = _convert_grouped(_worker_converter(), text.tolist(), config.tolist(), punct.tolist())
+        return pd.Series(out, dtype=object)
 
     return _convert
 
@@ -315,16 +326,12 @@ def register_sql_functions(spark, prefix: str = "cc_") -> list:
     def convert2(punct: bool):
         @F.pandas_udf(StringType())
         def _convert2(text: pd.Series, config: pd.Series) -> pd.Series:
-            cc = _worker_converter()
-            return pd.Series(
-                # NULL config propagates NULL (never silently the instance
-                # default direction), matching every other SQL function's
-                # NULL handling
-                [
-                    None if t is None or c is None else cc.convert(t, c, punct)
-                    for t, c in zip(text, config)
-                ]
-            )
+            # NULL config propagates NULL (never silently the instance
+            # default direction), matching every other SQL function's
+            # NULL handling
+            texts = text.tolist()
+            out = _convert_grouped(_worker_converter(), texts, config.tolist(), [punct] * len(texts))
+            return pd.Series(out, dtype=object)
 
         return _convert2
 

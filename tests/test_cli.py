@@ -159,3 +159,14 @@ def test_detofu_file_without_level_errors(tmp_path):
     custom.write_text("𬺰\t炸\tExtG\n", encoding="utf-8")
     with pytest.raises(SystemExit, match="requires --detofu"):
         main(["convert", "-c", "s2t", "--detofu-file", str(custom), "-i", str(src)])
+
+
+def test_cli_import_leaves_numpy_and_pandas_unloaded():
+    # line mode converts short strings with the scalar matcher; numpy and
+    # pandas load only when a long text first takes the vectorized round
+    import subprocess
+    import sys
+
+    code = "import sys, openccnet_spark.cli; print('numpy' in sys.modules, 'pandas' in sys.modules)"
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True, check=True)
+    assert out.stdout.split() == ["False", "False"]
