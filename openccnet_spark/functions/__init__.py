@@ -13,6 +13,10 @@ Design rules:
   variants are keyed by their spec and cached the same way.
 * Relational work (lengths, ratios, regex scrub, keep/drop) stays in
   JVM built-ins — see ``openccnet_spark.operators.quality``.
+* **A worker re-reads no unchanged zip per task.** Unpickling any UDF here
+  imports the package, whose ``__init__`` installs ``zipcache``'s
+  stat-checked ``zipimporter.invalidate_caches`` in the worker (once per
+  process); UDF bodies add no per-call setup for it.
 """
 
 from __future__ import annotations

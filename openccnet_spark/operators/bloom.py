@@ -64,6 +64,12 @@ def bloom_positions(h: int, m_bits: int) -> tuple[int, ...]:
     return tuple((lo + s * hi) % m_bits for s in range(BLOOM_K))
 
 
+def _bit_positions(h: np.ndarray, m_bits: int) -> list:
+    """``bloom_positions`` over a uint64 array: one position array per hash."""
+    lo, hi = h % np.uint64(1 << 30), h >> np.uint64(30)
+    return [(lo + np.uint64(s) * hi) % np.uint64(m_bits) for s in range(BLOOM_K)]
+
+
 def bloom_build(df: DataFrame, hash_col: str = "h", m_bits: int = 1 << 20) -> bytes:
     """Build the index bitmap: one partial per partition, OR-ed driver-side.
 
@@ -83,10 +89,7 @@ def bloom_build(df: DataFrame, hash_col: str = "h", m_bits: int = 1 << 20) -> by
             if not len(pdf):
                 continue
             seen = True
-            h = pdf[hash_col].to_numpy(dtype=np.uint64)
-            lo, hi = h % np.uint64(1 << 30), h >> np.uint64(30)
-            for s in range(BLOOM_K):
-                pos = (lo + np.uint64(s) * hi) % np.uint64(m_bits)
+            for pos in _bit_positions(pdf[hash_col].to_numpy(dtype=np.uint64), m_bits):
                 np.bitwise_or.at(
                     bits, (pos // 64).astype(np.int64), np.uint64(1) << (pos % np.uint64(64))
                 )
@@ -117,11 +120,8 @@ def bloom_tag(
         for pdf in batches:
             if not len(pdf):
                 continue
-            h = pdf[hash_col].to_numpy(dtype=np.uint64)
-            lo, hi = h % np.uint64(1 << 30), h >> np.uint64(30)
-            hit = np.ones(len(h), dtype=bool)
-            for s in range(BLOOM_K):
-                pos = (lo + np.uint64(s) * hi) % np.uint64(m_bits)
+            hit = np.ones(len(pdf), dtype=bool)
+            for pos in _bit_positions(pdf[hash_col].to_numpy(dtype=np.uint64), m_bits):
                 word = bits[(pos // 64).astype(np.int64)]
                 hit &= (word >> (pos % np.uint64(64))) & np.uint64(1) != 0
             out = pdf.copy()

@@ -118,39 +118,38 @@ def exact_duplicates_prehash(
     )
 
 
+def _shingle_set(text: str | None) -> set:
+    """Distinct word 3-gram shingles (the split and join of ``shingles_col``)."""
+    words = (text or "").split(" ")
+    return {" ".join(words[i : i + 3]) for i in range(max(len(words) - 2, 0))}
+
+
+def _minhash(sh: set) -> np.ndarray:
+    """63-perm MinHash signature of one shingle set (zeros when empty).
+
+    ((a*h + b) wrapped mod 2^64) mod p, all perms x all shingles, min per
+    perm. NB the uint64 product WRAPS before the % p, so this is a fixed
+    deterministic mixing family, NOT an exact evaluation of the universal
+    hash (a*h+b) mod p — any cross-engine recompute must reproduce the same
+    mod-2^64 wrap. Recall is what matters and is validated against the
+    brute-force exact-Jaccard oracle, not a collision bound."""
+    if not sh:
+        return np.zeros(N_PERMS, dtype=np.int64)
+    h = np.array([zlib.crc32(s.encode("utf-8")) for s in sh], dtype=np.uint64)
+    vals = (_PERM_A[:, None] * h[None, :] + _PERM_B[:, None]) % _MERSENNE
+    return vals.min(axis=1).astype(np.int64)
+
+
 def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """63-perm (21 bands x 3 rows) MinHash signatures via one Arrow pass."""
     out_schema = f"{id_col} long, sig array<long>"
-    a, b = _PERM_A, _PERM_B
 
     def _sign(batches):
         for pdf in batches:
             ids, sigs = [], []
             for did, text in zip(pdf[id_col], pdf[text_col]):
-                words = (text or "").split(" ")
-                sh = {
-                    " ".join(words[i : i + 3])
-                    for i in range(max(len(words) - 2, 0))
-                }
-                if not sh:
-                    sig = np.zeros(N_PERMS, dtype=np.int64)
-                else:
-                    h = np.array(
-                        [zlib.crc32(s.encode("utf-8")) for s in sh], dtype=np.uint64
-                    )
-                    # ((a*h + b) wrapped mod 2^64) mod p, all perms x all
-                    # shingles, min per perm. NB the uint64 product WRAPS
-                    # before the % p, so this is a fixed deterministic
-                    # mixing family, NOT an exact evaluation of the
-                    # universal hash (a*h+b) mod p — any cross-engine
-                    # recompute must reproduce the same mod-2^64 wrap.
-                    # Recall is what matters and is validated against the
-                    # brute-force exact-Jaccard oracle, not a collision
-                    # bound.
-                    vals = (a[:, None] * h[None, :] + b[:, None]) % _MERSENNE
-                    sig = vals.min(axis=1).astype(np.int64)
                 ids.append(did)
-                sigs.append(sig.tolist())
+                sigs.append(_minhash(_shingle_set(text)).tolist())
             yield pd.DataFrame({id_col: ids, "sig": sigs})
 
     return df.select(id_col, text_col).mapInPandas(_sign, out_schema)
@@ -169,27 +168,14 @@ def _signatures_with_shingles(
     array ORDER differs, which no consumer observes — the Jaccard verify
     uses size/intersect only (order-insensitive, oracle-pinned)."""
     out_schema = f"{id_col} long, sig array<long>, sh array<string>"
-    a, b = _PERM_A, _PERM_B
 
     def _run(batches):
         for pdf in batches:
             ids, sigs, shs = [], [], []
             for did, text in zip(pdf[id_col], pdf[text_col]):
-                words = (text or "").split(" ")
-                sh = {
-                    " ".join(words[i : i + 3])
-                    for i in range(max(len(words) - 2, 0))
-                }
-                if not sh:
-                    sig = np.zeros(N_PERMS, dtype=np.int64)
-                else:
-                    h = np.array(
-                        [zlib.crc32(s.encode("utf-8")) for s in sh], dtype=np.uint64
-                    )
-                    vals = (a[:, None] * h[None, :] + b[:, None]) % _MERSENNE
-                    sig = vals.min(axis=1).astype(np.int64)
+                sh = _shingle_set(text)
                 ids.append(did)
-                sigs.append(sig.tolist())
+                sigs.append(_minhash(sh).tolist())
                 shs.append(list(sh))
             yield pd.DataFrame({id_col: ids, "sig": sigs, "sh": shs})
 
@@ -368,6 +354,20 @@ _SIMHASH_BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS
 _SIMHASH_BAND_MASK = (1 << _SIMHASH_BAND_BITS) - 1
 
 
+def _simhash(text: str | None) -> int:
+    """60-bit SimHash of one document's distinct words (md5-prefix features)."""
+    import hashlib
+
+    shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
+    words = set((text or "").split(" "))
+    h = np.array(
+        [int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16) for w in words],
+        dtype=np.uint64,
+    )
+    bitsums = (((h[:, None] >> shifts[None, :]) & 1).astype(np.int64) * 2 - 1).sum(axis=0)
+    return int(((bitsums > 0).astype(np.uint64) << shifts).sum())
+
+
 def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """60-bit SimHash signatures via one Arrow pass (numpy per document).
 
@@ -379,24 +379,12 @@ def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
     One narrow Python stage replaces the previous 64-fold JVM expression
     (a whole-stage-codegen hazard on long documents).
     """
-    import hashlib
-
     out_schema = f"{id_col} long, simhash long"
-    shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
 
     def _sign(batches):
         for pdf in batches:
-            ids, sigs = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                words = set((text or "").split(" "))
-                h = np.array(
-                    [int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16) for w in words],
-                    dtype=np.uint64,
-                )
-                bitsums = (((h[:, None] >> shifts[None, :]) & 1).astype(np.int64) * 2 - 1).sum(axis=0)
-                sig = int(((bitsums > 0).astype(np.uint64) << shifts).sum())
-                ids.append(did)
-                sigs.append(sig)
+            ids = pdf[id_col].tolist()
+            sigs = [_simhash(text) for text in pdf[text_col]]
             yield pd.DataFrame({id_col: ids, "simhash": sigs})
 
     return df.select(id_col, text_col).mapInPandas(_sign, out_schema)

@@ -31,9 +31,11 @@ The commit path of ``checkpointed_quality_filter``, in order:
    dropped_<rule>..., run_id, status)`` — is aggregated from the cached
    frame (already hash-partitioned: no exchange) and appended to the
    metrics table; an ``Observation`` on that same append yields the
-   buckets processed. Nothing is read back from the data files.
-   Metrics land AFTER data: a crash between the two commits leaves those
-   buckets unmarked, and they are reprocessed (idempotently) on resume.
+   buckets processed (``observed``, a bounded wait: ``Observation.get``
+   would block forever if no action ever ran the observed plan). Nothing
+   is read back from the data files. Metrics land AFTER data: a crash
+   between the two commits leaves those buckets unmarked, and they are
+   reprocessed (idempotently) on resume.
 4. The cached frame is released in a ``finally``, whether or not a
    commit failed.
 
@@ -44,6 +46,7 @@ accounting in its parallel convert path (``Opencc.cs:1246-1267``).
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -51,6 +54,8 @@ from pyspark.sql import functions as F
 from .quality import DROP_RULES
 
 N_BUCKETS = 64
+# How long ``observed`` waits for metrics whose action already returned.
+OBSERVATION_TIMEOUT_S = 60.0
 
 
 def with_partition_id(df: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
@@ -86,6 +91,22 @@ def completed_buckets(spark: SparkSession, metrics_path: str) -> set:
         .collect()
     )
     return {r.partition_id for r in rows}
+
+
+def observed(obs: Observation, run_id: str) -> dict:
+    """``obs.get`` with a deadline. ``Observation.get`` blocks forever when
+    no action ran the observed plan; this polls the JVM observation (each
+    ``getRowOrEmpty`` waits up to 100 ms for the metrics, returning as soon
+    as they land) for ``OBSERVATION_TIMEOUT_S``, then raises
+    ``TimeoutError`` naming ``run_id``."""
+    deadline = time.monotonic() + OBSERVATION_TIMEOUT_S
+    while not obs._jo.getRowOrEmpty().isDefined():
+        if time.monotonic() >= deadline:
+            raise TimeoutError(
+                f"run {run_id!r}: observed metrics did not arrive within "
+                f"{OBSERVATION_TIMEOUT_S:g} s (no action ran the observed plan)"
+            )
+    return obs.get
 
 
 def bucket_metrics(out: DataFrame) -> DataFrame:
@@ -168,7 +189,7 @@ def checkpointed_quality_filter(
             .write.mode("append")
             .parquet(metrics_path)
         )
-        processed = sorted(obs.get["processed"])
+        processed = sorted(observed(obs, run_id)["processed"])
     finally:
         out.unpersist()
     return {"processed": processed, "skipped": sorted(done)}

@@ -191,6 +191,19 @@ def _row_irls_partials(X: np.ndarray, y: np.ndarray, w: np.ndarray):
 # -- training ----------------------------------------------------------------
 
 
+def _moments(batches):
+    """Per-partition exact normal-equation moments (X'X, X'y, n)."""
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        X = np.stack([np.asarray(f, dtype=np.int64) for f in pdf["feats"]])
+        y = pdf["y"].to_numpy().astype(np.int64)
+        G = X.T @ X  # exact: int64 features, no quantization at all
+        yield pd.DataFrame(
+            {"g": [G.ravel().tolist()], "b": [(X.T @ y).tolist()], "n": [len(X)]}
+        )
+
+
 def train_distributed(
     df: DataFrame,
     text_col: str = "text",
@@ -208,18 +221,6 @@ def train_distributed(
         train = train.filter(F.col(id_col) % sample_mod == 0)
     fdf = featurized_frame(train, text_col, id_col).select("y", "feats").persist()
     d = QM_N_FEATS
-
-    def _moments(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack([np.asarray(f, dtype=np.int64) for f in pdf["feats"]])
-            y = pdf["y"].to_numpy().astype(np.int64)
-            G = X.T @ X  # exact: int64 features, no quantization at all
-            yield pd.DataFrame(
-                {"g": [G.ravel().tolist()], "b": [(X.T @ y).tolist()], "n": [len(X)]}
-            )
-
     try:
         parts = fdf.mapInPandas(
             _moments, "g array<long>, b array<long>, n long"

@@ -30,6 +30,18 @@ _NEWLINES = re.compile("\r\n|\r|\n")
 LINES_SCHEMA = "path string, line_no long, text string"
 
 
+def _lines(decoded: str) -> list:
+    """Newline-only splitting (\\r\\n, \\r, \\n) — ``str.splitlines`` would
+    ALSO split on \\v \\f \\x1c-\\x1e \\x85 U+2028/29, shifting every later
+    line_no vs the file's actual newline count (and vs wc -l /
+    spark.read.text / the reference CLI). A trailing newline terminates the
+    last line rather than opening an empty one, like splitlines."""
+    lines = _NEWLINES.split(decoded) if decoded else []
+    if lines and lines[-1] == "":
+        lines.pop()
+    return lines
+
+
 def read_text_files(
     spark: SparkSession,
     path_glob: str,
@@ -53,16 +65,7 @@ def read_text_files(
         for pdf in batches:
             paths, line_nos, texts = [], [], []
             for p, content in zip(pdf["path"], pdf["content"]):
-                decoded = bytes(content).decode(encoding, errors=errors)
-                # newline-only splitting (\r\n, \r, \n) — str.splitlines
-                # would ALSO split on \v \f \x1c-\x1e \x85 U+2028/29,
-                # shifting every subsequent line_no vs the file's actual
-                # newline count (and vs wc -l / spark.read.text / the
-                # reference CLI). A trailing newline terminates the last
-                # line rather than opening an empty one, like splitlines.
-                lines = _NEWLINES.split(decoded) if decoded else []
-                if lines and lines[-1] == "":
-                    lines.pop()
+                lines = _lines(bytes(content).decode(encoding, errors=errors))
                 for i, line in enumerate(lines):
                     paths.append(p)
                     line_nos.append(i)

@@ -17,6 +17,8 @@ accumulation across micro-batches with an idle timeout), via
 
 from __future__ import annotations
 
+import datetime as _dt
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -126,6 +128,15 @@ _SESSION_STATE = StructType(
 )
 
 
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+
+
+def _from_us(us: int) -> _dt.datetime:
+    # exact integer arithmetic — fromtimestamp(us / 1e6) can round the
+    # accumulated microseconds through the float division
+    return _EPOCH + _dt.timedelta(microseconds=int(us))
+
+
 def streaming_conversation_state(
     out: DataFrame, watermark: str = "20 minutes", idle_timeout_ms: int = 600_000
 ) -> DataFrame:
@@ -143,16 +154,7 @@ def streaming_conversation_state(
     partitioning); each key holds 4 counters, so the state store stays
     O(active conversations), not O(turns).
     """
-    import datetime as _dt
-
     import pandas as pd
-
-    _EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-
-    def _from_us(us: int) -> _dt.datetime:
-        # exact integer arithmetic — fromtimestamp(us / 1e6) can round the
-        # accumulated microseconds through the float division
-        return _EPOCH + _dt.timedelta(microseconds=int(us))
 
     def _update(key, pdf_iter, state: GroupState):
         if state.hasTimedOut:
