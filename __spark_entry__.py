@@ -742,37 +742,6 @@ def _q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.withColumn("rank", F.row_number().over(wnd).cast("int"))
 
 
-def _q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Learned BPE merge table (operators/bpe.py): the corpus-sized work
-    is ONE map-side-combined word count; the driver transfer is the
-    v_max-bounded top-vocab (deterministic count-desc/word-asc order);
-    merge learning is greedy with a total-order tie-break, so the result
-    is bit-stable at any partitioning. The oracle retrains from scratch
-    in a self-contained naive Python implementation reading the same
-    parquet — a distributed-count error, tie-break drift or top-V cut
-    mismatch changes learned merges and hash-fails."""
-    from openccnet_spark.operators.bpe import bpe_train
-
-    docs = _read(spark, sf_dir, "documents")
-    out, _ = bpe_train(docs)
-    return out
-
-
-def _q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-then-serve: per-document token counts under the learned
-    merges, tokenized worker-side with a per-batch word memo (work is
-    bounded by distinct words per task — the Zipf head, not the token
-    stream). Serving merges lowest-rank-first; the oracle tokenizes by
-    SEQUENTIAL rank-order application — the two strategies are provably
-    equal (a rank-k merge only creates pairs of rank > k), so agreement
-    here pins that proof corpus-wide."""
-    from openccnet_spark.operators.bpe import bpe_train, token_counts
-
-    docs = _read(spark, sf_dir, "documents")
-    _, merges = bpe_train(docs)
-    return token_counts(docs, merges)
-
-
 def _q_quality_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-language quality-score percentiles (p50/p90/p99) via the
     rank-at-ceil(p*n) definition — integer-exact in both engines (no
@@ -882,116 +851,6 @@ _STRAT_DEFAULT_PPM = 100_000
 _TOKEN_BUDGETS = {"en": 6_000, "zh": 2_000, "fr": 99_999_999, "es": 500}
 _TOP_FRAC_PPM = 300_000
 _MIX_TARGET_PPM = {"src0": 400_000, "src1": 300_000, "src2": 200_000, "src3": 100_000}
-
-
-def _lm_model(spark: SparkSession, sf_dir: str):
-    from openccnet_spark.operators.lm import lm_train
-
-    docs = _read(spark, sf_dir, "documents")
-    trusted = docs.filter(F.col("doc_id") % 13 == 3)
-    return docs, lm_train(trusted)
-
-
-def _q_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed stupid-backoff LM training (CCNet shape, Brants et
-    al. 2007): bigram/unigram counts over the trusted subset (doc_id %
-    13 == 3) as order-free integer aggregations; emits the bigram score
-    table with ppm = (c(ab) * 1e6) DIV c(a) — pure integer division, so
-    the oracle recomputes the model bit-exactly."""
-    docs, (bigram_ppm, _) = _lm_model(spark, sf_dir)
-    return bigram_ppm
-
-
-def _q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus fluency scoring against the trained LM: explode to
-    bigrams, LEFT-join bigram ppm then unigram backoff ppm (OOV -> 0),
-    integer mean per document. Two equi-joins on bounded token keys +
-    one map-side-combinable aggregate; the corpus never collects."""
-    from openccnet_spark.operators.lm import lm_score
-
-    docs, (bigram_ppm, backoff_ppm) = _lm_model(spark, sf_dir)
-    return lm_score(docs, bigram_ppm, backoff_ppm)
-
-
-def _q_lm_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet head/middle/tail bucketing per language: top 10% by LM
-    score -> head, next 30% -> middle, rest -> tail, with exact integer
-    quotas and (score DESC, doc_id ASC) tie-breaks via two
-    top_fraction_select decompositions; the oracle is the naive
-    per-language rank, so the decomposition must equal it exactly."""
-    from openccnet_spark.operators.lm import ccnet_buckets, lm_score
-
-    docs, (bigram_ppm, backoff_ppm) = _lm_model(spark, sf_dir)
-    scored = lm_score(docs, bigram_ppm, backoff_ppm).join(
-        docs.select("doc_id", "lang"), "doc_id"
-    )
-    # the scored frame feeds BOTH top_fraction decompositions and the
-    # final tag join — persist so the scoring pipeline runs once; the
-    # caller releases it via _persist_handles (see queries())
-    scored = scored.persist()
-    out = ccnet_buckets(scored)
-    out._persist_handles = [scored]
-    return out
-
-
-def _q_lm_score_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-faithful variant: one LM PER LANGUAGE (every count, total
-    and score join carries lang; per-language totals stay a distributed
-    frame — no driver scalar), each document scored against its own
-    language's model."""
-    from openccnet_spark.operators.lm import lm_score, lm_train
-
-    docs = _read(spark, sf_dir, "documents")
-    trusted = docs.filter(F.col("doc_id") % 13 == 3)
-    bigram_ppm, backoff_ppm = lm_train(trusted, strata_col="lang")
-    return lm_score(docs, bigram_ppm, backoff_ppm, strata_col="lang")
-
-
-def _q_lm_score_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trigram-order stupid backoff (the production order): tokens after
-    the second score S(c|ab) = trigram ppm if seen else (2 * S(c|b)) DIV
-    5 — the 0.4 backoff as an exact integer step recursing into the
-    bigram score; each document's first transition scores at bigram
-    order, so n_bigrams matches lm_score's row domain exactly."""
-    from openccnet_spark.operators.lm import lm_score3, lm_train3
-
-    docs = _read(spark, sf_dir, "documents")
-    trusted = docs.filter(F.col("doc_id") % 13 == 3)
-    trigram_ppm, bigram_ppm, backoff_ppm = lm_train3(trusted)
-    return lm_score3(docs, trigram_ppm, bigram_ppm, backoff_ppm)
-
-
-def _sql_lm_cte() -> str:
-    """Shared oracle CTE chain: trusted counts -> model ppm tables ->
-    per-document corpus scores (the exact integer pipeline of
-    operators/lm.py)."""
-    return """
-tr AS (SELECT text FROM documents WHERE doc_id % 13 = 3),
-tw AS (SELECT list_filter(string_split(text, ' '), x -> x <> '') AS w FROM tr),
-bg AS (SELECT w[i] AS a, w[i+1] AS b FROM
-        (SELECT w, unnest(generate_series(1, len(w)-1)) AS i FROM tw
-         WHERE len(w) >= 2)),
-bc AS (SELECT a, b, count(*)::BIGINT AS cnt_ab FROM bg GROUP BY 1, 2),
-uni AS (SELECT unnest(w) AS a FROM tw),
-uc AS (SELECT a, count(*)::BIGINT AS cnt_a FROM uni GROUP BY 1),
-tot AS (SELECT count(*)::BIGINT AS t FROM uni),
-bpm AS (SELECT bc.a, bc.b, ((cnt_ab * 1000000) // cnt_a)::BIGINT AS ppm
-        FROM bc JOIN uc USING (a)),
-bo AS (SELECT a AS b,
-              ((2 * cnt_a * 1000000) // (5 * (SELECT t FROM tot)))::BIGINT
-                AS ppm
-       FROM uc),
-cw AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '')
-         AS w FROM documents),
-cbg AS (SELECT doc_id, w[i] AS a, w[i+1] AS b FROM
-         (SELECT doc_id, w, unnest(generate_series(1, len(w)-1)) AS i
-          FROM cw WHERE len(w) >= 2)),
-tok AS (SELECT doc_id, coalesce(bpm.ppm, bo.ppm, 0) AS tok_ppm
-        FROM cbg LEFT JOIN bpm USING (a, b) LEFT JOIN bo USING (b)),
-sc AS (SELECT doc_id, count(*)::BIGINT AS n_bigrams,
-              (sum(tok_ppm)::BIGINT // count(*))::BIGINT AS score_ppm
-       FROM tok GROUP BY 1)
-"""
 
 
 def _q_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1177,31 +1036,6 @@ def _q_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_signals(docs)
 
 
-def _q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distilled quality classifier: distributed deterministic training
-    (one integer-EXACT normal-equations pass + 3 quantized Newton/IRLS
-    rounds — every cross-partition reduction an order-free int64 sum, so
-    the weights are bit-identical at any partitioning) of a linear
-    student imitating the heuristic quality gate on the doc_id %% 2
-    slice, then a pure-JVM integer scoring pass over EVERY document
-    (explode -> broadcast weight table -> map-side combined sum). The
-    oracle replays training bit-exactly in numpy and recomputes the
-    integer scores in closed-form SQL. NB: like the IVF oracles, the
-    replay trains on the sf0.01 tables (SPARK_GRAFT_ORACLE_SF_DIR)."""
-    from openccnet_spark.operators.quality_model import (
-        quantize_weights,
-        score_frame,
-        train_distributed,
-    )
-
-    docs = _read(spark, sf_dir, "documents")
-    handles: list = []
-    wq = quantize_weights(train_distributed(docs, sample_mod=2, handles=handles))
-    out = score_frame(docs, wq)
-    out._persist_handles = handles  # released by the caller; see queries()
-    return out
-
-
 #: (case_id, op, input, expected) for the St/Ts char-only goldens (O10)
 _ST_TS_GOLDENS = [
     (0, "st", "发", "發"),
@@ -1340,32 +1174,6 @@ def _q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         h.unpersist()
     out._persist_handles = comp_handles
     return out
-
-
-_DSIR_FRAC_PPM = 250000
-
-
-def _q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance resampling (operators/dsir.py): carve the
-    zh-like quarter out of the corpus. Feature counts are bucket-bounded
-    aggregations (two <=4096-row collects), the log-ratio weight solve is
-    driver-side milli-quantized integers both engines consume, scoring is
-    a broadcast-join integer dot, and the selection is the exact-rank
-    top-fraction over the clamped bounded-domain average. The oracle
-    recounts features independently in Python and replays everything."""
-    from openccnet_spark.operators.dsir import (
-        bucket_counts,
-        dsir_select,
-        dsir_weights,
-    )
-
-    docs = _read(spark, sf_dir, "documents")
-    raw = {r["bucket"]: r["cnt"] for r in bucket_counts(docs).collect()}
-    tgt = {
-        r["bucket"]: r["cnt"]
-        for r in bucket_counts(docs.filter(F.col("lang") == "zh")).collect()
-    }
-    return dsir_select(docs, dsir_weights(tgt, raw), frac_ppm=_DSIR_FRAC_PPM)
 
 
 def _q_conv_fold_tools(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1678,13 +1486,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "conv_dedup_exact": _armed(_q_conv_dedup_exact),
         "conv_render": _armed(_q_conv_render),
         # -- long-green family representatives ------------------------------
-        "lm_train": _armed(_q_lm_train),
-        "lm_score": _armed(_q_lm_score),
-        "lm_bucket": _armed(_q_lm_bucket),
-        "lm_score_lang": _armed(_q_lm_score_lang),
-        "lm_score_trigram": _armed(_q_lm_score_trigram),
         "dedup_exact": _armed(_q_dedup_exact),
-        "quality_classifier": _armed(_q_quality_classifier),
         "dedup_bloom_prefilter": _armed(_q_dedup_bloom_prefilter),
         "pdf_reflow_convert": _armed(_q_pdf_reflow_convert),
         "office_convert": _armed(_q_office_convert),
@@ -1716,15 +1518,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "skew_join_priority": _armed(_q_skew_join_priority),
         "textstats": _armed(_q_textstats),
         "vocab_topk": _armed(_q_vocab_topk),
-        "bpe_train": _armed(_q_bpe_train),
-        "bpe_tokenize": _armed(_q_bpe_tokenize),
         "quality_quantiles": _armed(_q_quality_quantiles),
         "multimodal_features": _armed(_q_multimodal_features),
         "multimodal_decode": _armed(_q_multimodal_decode),
         "multimodal_audio": _armed(_q_multimodal_audio),
         "multimodal_video": _armed(_q_multimodal_video),
         "decontaminate_ngram": _armed(_q_decontaminate_ngram),
-        "dsir_select": _armed(_q_dsir_select),
         "sample_stratified": _armed(_q_sample_stratified),
         "quality_repetition": _armed(_q_quality_repetition),
     }
@@ -2025,89 +1824,6 @@ SELECT c.doc_id, count(*)::BIGINT AS n_hits
 FROM cng c JOIN bng b USING (ng)
 GROUP BY 1
 """,
-        # the LM family recomputes training counts, the integer model
-        # tables and every corpus score from scratch (operators/lm.py)
-        "lm_train": f"WITH {_sql_lm_cte()} SELECT a, b, ppm FROM bpm",
-        "lm_score": f"WITH {_sql_lm_cte()} "
-        "SELECT doc_id, n_bigrams, score_ppm FROM sc",
-        "lm_score_lang": """
-WITH tr AS (SELECT lang, text FROM documents WHERE doc_id % 13 = 3),
-tw AS (SELECT lang, list_filter(string_split(text, ' '), x -> x <> '')
-         AS w FROM tr),
-bg AS (SELECT lang, w[i] AS a, w[i+1] AS b FROM
-        (SELECT lang, w, unnest(generate_series(1, len(w)-1)) AS i
-         FROM tw WHERE len(w) >= 2)),
-bc AS (SELECT lang, a, b, count(*)::BIGINT AS cnt_ab FROM bg
-       GROUP BY 1, 2, 3),
-uni AS (SELECT lang, unnest(w) AS a FROM tw),
-uc AS (SELECT lang, a, count(*)::BIGINT AS cnt_a FROM uni GROUP BY 1, 2),
-tot AS (SELECT lang, count(*)::BIGINT AS t FROM uni GROUP BY 1),
-bpm AS (SELECT bc.lang, bc.a, bc.b,
-               ((cnt_ab * 1000000) // cnt_a)::BIGINT AS ppm
-        FROM bc JOIN uc USING (lang, a)),
-bo AS (SELECT uc.lang, a AS b,
-              ((2 * cnt_a * 1000000) // (5 * t))::BIGINT AS ppm
-       FROM uc JOIN tot USING (lang)),
-cw AS (SELECT doc_id, lang,
-              list_filter(string_split(text, ' '), x -> x <> '') AS w
-       FROM documents),
-cbg AS (SELECT doc_id, lang, w[i] AS a, w[i+1] AS b FROM
-         (SELECT doc_id, lang, w, unnest(generate_series(1, len(w)-1)) AS i
-          FROM cw WHERE len(w) >= 2)),
-tok AS (SELECT doc_id, cbg.lang, coalesce(bpm.ppm, bo.ppm, 0) AS tok_ppm
-        FROM cbg LEFT JOIN bpm USING (lang, a, b)
-                 LEFT JOIN bo USING (lang, b))
-SELECT doc_id, lang, count(*)::BIGINT AS n_bigrams,
-       (sum(tok_ppm)::BIGINT // count(*))::BIGINT AS score_ppm
-FROM tok GROUP BY 1, 2
-""",
-        # trigram order reuses the shared chain's trusted counts (bc),
-        # model tables (bpm, bo) and tokenized corpus (cw); unreferenced
-        # tail CTEs (tok, sc) are dead and never evaluated
-        "lm_score_trigram": f"""
-WITH {_sql_lm_cte()},
-tc AS (SELECT a, b, c, count(*)::BIGINT AS cnt_abc FROM
-        (SELECT w[i] AS a, w[i+1] AS b, w[i+2] AS c FROM
-          (SELECT w, unnest(generate_series(1, len(w)-2)) AS i
-           FROM tw WHERE len(w) >= 3))
-       GROUP BY 1, 2, 3),
-tpm AS (SELECT tc.a, tc.b, tc.c,
-               ((cnt_abc * 1000000) // cnt_ab)::BIGINT AS ppm
-        FROM tc JOIN bc USING (a, b)),
-cfp AS (SELECT doc_id, w[1] AS a, w[2] AS b FROM cw WHERE len(w) >= 2),
-tok1 AS (SELECT doc_id, coalesce(bpm.ppm, bo.ppm, 0) AS tok_ppm
-         FROM cfp LEFT JOIN bpm USING (a, b) LEFT JOIN bo USING (b)),
-ctg AS (SELECT doc_id, w[i] AS a, w[i+1] AS b, w[i+2] AS c FROM
-         (SELECT doc_id, w, unnest(generate_series(1, len(w)-2)) AS i
-          FROM cw WHERE len(w) >= 3)),
-tok3 AS (SELECT doc_id,
-                coalesce(tpm.ppm,
-                         (2 * coalesce(p2.ppm, p1.ppm, 0)) // 5) AS tok_ppm
-         FROM ctg LEFT JOIN tpm USING (a, b, c)
-                  LEFT JOIN bpm p2 ON p2.a = ctg.b AND p2.b = ctg.c
-                  LEFT JOIN bo p1 ON p1.b = ctg.c),
-u AS (SELECT * FROM tok1 UNION ALL SELECT * FROM tok3)
-SELECT doc_id, count(*)::BIGINT AS n_bigrams,
-       (sum(tok_ppm)::BIGINT // count(*))::BIGINT AS score_ppm
-FROM u GROUP BY 1
-""",
-        "lm_bucket": f"""
-WITH {_sql_lm_cte()},
-sl AS (SELECT sc.doc_id, d.lang, sc.score_ppm
-       FROM sc JOIN documents d USING (doc_id)),
-r AS (SELECT *,
-        row_number() OVER (PARTITION BY lang
-                           ORDER BY score_ppm DESC, doc_id) AS rn,
-        count(*) OVER (PARTITION BY lang) AS n
-      FROM sl)
-SELECT doc_id, lang, score_ppm,
-       CASE WHEN rn <= least(n, (n * 100000 + 999999) // 1000000)
-              THEN 'head'
-            WHEN rn <= least(n, (n * 400000 + 999999) // 1000000)
-              THEN 'middle'
-            ELSE 'tail' END AS bucket
-FROM r
-""",
         # exact replay of the deterministic per-stratum Bernoulli draw
         "sample_stratified": f"""
 WITH d AS (
@@ -2271,163 +1987,7 @@ FROM d GROUP BY text
             "case_id, line_no, text",
         ),
         "dedup_simhash": _dedup_simhash_oracle(),
-        **_optional_oracles(),
     }
-
-
-def _dsir_select_oracle() -> str:
-    """Independent replay: recount features from the parquet in scalar
-    Python, rebuild the identical integer weight table, re-derive scores
-    and the exact-rank selection in SQL."""
-    import duckdb
-
-    from openccnet_spark.operators.dsir import (
-        dsir_weights,
-        py_bucket_counts,
-        sql_dsir_select,
-    )
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    rows = duckdb.sql(
-        f"SELECT lang, text FROM '{sf_dir}/documents.parquet'"
-    ).fetchall()
-    raw = py_bucket_counts([t for _l, t in rows])
-    tgt = py_bucket_counts([t for l, t in rows if l == "zh"])
-    return sql_dsir_select("documents", dsir_weights(tgt, raw), _DSIR_FRAC_PPM)
-
-
-def _optional_oracles() -> dict[str, str]:
-    """Oracles whose BUILDERS need local data (the IVF centroids come from
-    the sf0.01 parquet itself). If that read fails — fixtures elsewhere,
-    different host — the entry is omitted (driver records a rows-only
-    check) instead of poisoning every other oracle."""
-    out: dict[str, str] = {}
-    for name, builder in (
-        ("dsir_select", _dsir_select_oracle),
-        ("quality_classifier", _quality_classifier_oracle),
-        ("bpe_train", _bpe_train_oracle),
-        ("bpe_tokenize", _bpe_tokenize_oracle),
-    ):
-        try:
-            out[name] = builder()
-        except (OSError, ImportError) as exc:  # pragma: no cover - env-specific
-            # only the expected I/O-class failures are tolerated; a genuine
-            # builder bug must surface, not silently demote the check
-            print(f"{name} oracle unavailable: {exc}", file=sys.stderr)
-        except Exception as exc:
-            if type(exc).__module__.startswith("duckdb"):
-                print(f"{name} oracle unavailable: {exc}", file=sys.stderr)
-            else:
-                raise
-    return out
-
-
-def _bpe_replay():
-    """Shared input for both BPE oracles: doc rows + the self-contained
-    naive retraining (operators/bpe.py train_replay_py — no code shared
-    with the Spark path's counting, tie-break or application)."""
-    import duckdb
-
-    from openccnet_spark.operators.bpe import train_replay_py
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    rows = duckdb.sql(
-        f"SELECT doc_id, coalesce(text, '') FROM '{sf_dir}/documents.parquet' "
-        "ORDER BY doc_id"
-    ).fetchall()
-    merges, tokens_of = train_replay_py([t for _, t in rows])
-    return rows, merges, tokens_of
-
-
-def _bpe_train_oracle() -> str:
-    """Independent naive retrain emitted as literals — a distributed-count
-    error, top-V cut or tie-break drift changes the merge table."""
-    _, merges, _ = _bpe_replay()
-    return _values_oracle(
-        merges,
-        "merge_rank::INT AS merge_rank, lhs, rhs, pair_count::BIGINT AS pair_count",
-        "merge_rank, lhs, rhs, pair_count",
-    )
-
-
-def _bpe_tokenize_oracle() -> str:
-    """Per-doc token counts under the naive replay's merges, tokenized by
-    sequential rank-order application (vs serving's lowest-rank-first)."""
-    rows, _, tokens_of = _bpe_replay()
-    vals = []
-    for doc_id, text in rows:
-        ws = [w for w in text.split(" ") if w]
-        vals.append((int(doc_id), len(ws), sum(tokens_of(w) for w in ws)))
-    return _values_oracle(
-        vals,
-        "doc_id::BIGINT AS doc_id, n_words::BIGINT AS n_words, "
-        "n_tokens::BIGINT AS n_tokens",
-        "doc_id, n_words, n_tokens",
-    )
-
-
-def _quality_classifier_oracle() -> str:
-    """Replays the distilled-classifier training bit-exactly in numpy
-    (same integer features — the milli columns come from the engine-parity
-    DuckDB SQL — same exact/quantized order-free sums, same shared driver
-    solves) and emits the quantized weights as literals; the per-document
-    integer score is then recomputed in closed-form SQL, so a wrong
-    gradient, a partition-order leak or a scoring mismatch hash-fails."""
-    import duckdb
-
-    from openccnet_spark.operators.quality_model import (
-        QM_DIM,
-        QM_TEACHER_MILLI,
-        classifier_replay,
-        quantize_weights,
-        sql_milli_features,
-    )
-    from openccnet_spark.operators.textstats import sql_quality_score_milli
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    mf = sql_milli_features("text")
-    q = sql_quality_score_milli("text")
-    rows = duckdb.sql(
-        f"""
-SELECT doc_id, text,
-       CASE WHEN {q} >= {QM_TEACHER_MILLI} THEN 1 ELSE 0 END,
-       {mf['lm']}, {mf['uq']}, {mf['sm']}
-FROM '{sf_dir}/documents.parquet' ORDER BY doc_id
-"""
-    ).fetchall()
-    wq = quantize_weights(
-        classifier_replay(
-            [r[0] for r in rows],
-            [r[1] for r in rows],
-            [r[2] for r in rows],
-            [r[3] for r in rows],
-            [r[4] for r in rows],
-            [r[5] for r in rows],
-            sample_mod=2,
-        )
-    )
-    case = " ".join(f"WHEN {i} THEN {int(wq[i])}" for i in range(QM_DIM))
-    return f"""
-WITH wsum AS (
-  SELECT doc_id,
-         sum(CASE ('0x' || substr(md5(word), 1, 15))::BIGINT % {QM_DIM}
-             {case} END)::BIGINT AS hs
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents) u
-  GROUP BY 1
-),
-s AS (
-  SELECT d.doc_id,
-         (CASE WHEN {q} >= {QM_TEACHER_MILLI} THEN 1 ELSE 0 END)::INT AS label,
-         (ws.hs + {mf['lm']} * ({int(wq[QM_DIM])})
-                + {mf['uq']} * ({int(wq[QM_DIM + 1])})
-                + {mf['sm']} * ({int(wq[QM_DIM + 2])})
-                + 1000 * ({int(wq[QM_DIM + 3])}))::BIGINT AS score_q
-  FROM documents d JOIN wsum ws USING (doc_id)
-)
-SELECT doc_id, label, score_q,
-       (CASE WHEN score_q >= 0 THEN 1 ELSE 0 END)::INT AS pred
-FROM s
-"""
 
 
 def _values_oracle(rows: list, select: str, names: str) -> str:

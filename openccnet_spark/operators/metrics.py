@@ -114,12 +114,12 @@ def bucket_metrics(out: DataFrame) -> DataFrame:
     aggs = [
         F.count(F.lit(1)).alias("turns_seen"),
         F.sum(F.col("keep").cast("long")).alias("kept"),
-        F.sum(
-            (F.col("text_converted") != F.col("text")).cast("long")
-        ).alias("converted"),
-        F.sum(
-            (F.col("text_scrubbed") != F.col("text_converted")).cast("long")
-        ).alias("scrubbed"),
+        # count, not sum: a pre-gated turn's text_converted is NULL, and a
+        # sum over a bucket of only such turns would be NULL, not 0
+        F.count(F.when(F.col("text_converted") != F.col("text"), 1)).alias("converted"),
+        F.count(F.when(F.col("text_scrubbed") != F.col("text_converted"), 1)).alias(
+            "scrubbed"
+        ),
     ]
     for rule in DROP_RULES:
         aggs.append(

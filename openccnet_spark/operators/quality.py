@@ -9,9 +9,11 @@ scrubs PII. This module defines the rule constants ONCE and provides:
   PRODUCTION transcript pipeline computes the same metrics inside the one
   fused Arrow UDF instead (CPython ``re`` is ~50x faster than Spark
   regexp on this corpus — see operators/pipeline.py).
-* ``quality_reference`` / ``scrub_text`` — the pure-Python reference path
-  (the "reference labels" the Spark job must match at F1>=0.99; also used
-  to compute oracle literals for the driver's DuckDB comparison).
+* ``quality_metrics`` / ``scrub_text`` — the pure-Python per-turn metrics
+  and PII scrub. The fused UDF runs them, and so does
+  ``operators.pipeline.reference_label``, the reference labels the Spark
+  job must match at F1>=0.99 (also used to compute oracle literals for the
+  driver's DuckDB comparison).
 * ``sql_*`` helpers — DuckDB SQL fragments computing the same rules, used
   by ``__spark_entry__.oracle_sql`` so the driver independently re-derives
   the gate in a second engine.
@@ -57,7 +59,6 @@ PII_PATTERNS = (
 
 _PII_COMPILED = [(re.compile(p), r) for p, r in PII_PATTERNS]
 _SYMBOL_COMPILED = re.compile(SYMBOL_RE)
-_HAN_COMPILED = re.compile(HAN_RE)
 
 
 # --- Spark (built-in expressions; no Python in this path) -------------------
@@ -166,31 +167,6 @@ def quality_metrics(text: str) -> dict:
         "uniq_ratio": len(set(words)) / len(words),
         "symbol_ratio": symbols / max(n, 1),
     }
-
-
-def drop_reason_py(text: str, ppl: float | None = None, lang: str | None = None) -> str:
-    m = quality_metrics(text)
-    if m["char_len"] < MIN_CHARS:
-        return "too_short"
-    if m["char_len"] > MAX_CHARS:
-        return "too_long"
-    if m["word_cnt"] >= REP_MIN_WORDS and m["uniq_ratio"] < REP_UNIQUE_RATIO:
-        return "repetitive"
-    if m["symbol_ratio"] > SYMBOL_RATIO:
-        return "symbol_dense"
-    if ppl is not None and (lang is None or lang == "zh") and ppl > PPL_MAX:
-        return "high_ppl"
-    return "none"
-
-
-def lang_simple_py(text: str) -> str:
-    n = max(len(text), 1)
-    han = len(_HAN_COMPILED.findall(text))
-    if han * 20 >= n:
-        return "zh"
-    if re.search("[A-Za-z]", text):
-        return "en"
-    return "und"
 
 
 # --- DuckDB SQL fragments ----------------------------------------------------

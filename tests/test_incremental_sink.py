@@ -153,3 +153,22 @@ def test_completed_buckets_raises_on_unreadable_table(spark, tmp_path):
     (metrics / "part-00000.parquet").write_text("not a parquet file")
     with pytest.raises(Exception, match="(?i)parquet"):
         completed_buckets(spark, str(metrics))
+
+
+def test_all_pre_gated_bucket_counts_zero(spark, tmp_path):
+    """A bucket whose every turn is dropped before conversion (too short:
+    its ``text_converted`` is NULL) writes 0, not NULL, for the
+    ``converted`` and ``scrubbed`` counters."""
+    out_dir = str(tmp_path / "short")
+    src = spark_transcripts(spark, N_CONV)
+    conv = src.select("conv_id").first().conv_id
+    short = src.filter(F.col("conv_id") == conv).withColumn("text", F.lit("ab"))
+    r = checkpointed_quality_filter(
+        spark, short, out_dir, run_id="s", n_buckets=N_BUCKETS, with_ppl=False
+    )
+    assert len(r["processed"]) == 1
+    (row,) = spark.read.parquet(f"{out_dir}/metrics").collect()
+    assert row.turns_seen >= 2
+    assert row.dropped_too_short == row.turns_seen
+    assert row.kept == 0
+    assert (row.converted, row.scrubbed) == (0, 0)

@@ -6,11 +6,18 @@ scripts, the benchmark, the tools and the driver contract, follow every
 absolute or relative — through repo-local files, and assert that each
 ``openccnet_spark/**/*.py`` module is reached. A module that only its own
 tests import is dead code; deleting a feature must take its modules along.
+
+A second walk checks one level down: every top-level function and class of
+the package must be named somewhere other than its own definition — in the
+package, the entry points or the tests (a name listed in a module's
+``__all__`` is public API and counts). Deleting a caller must take the
+helpers that only it used along.
 """
 
 from __future__ import annotations
 
 import ast
+from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -89,3 +96,46 @@ def test_every_package_module_is_reachable():
     unreached = sorted(modules - _reached())
     assert not unreached, f"modules no entry point imports: {unreached}"
 
+
+def _names(node: ast.AST) -> Counter:
+    """How often each identifier is named under ``node``: variables,
+    attributes, imported names and the strings of an ``__all__`` list."""
+    found: Counter = Counter()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            found[n.id] += 1
+        elif isinstance(n, ast.Attribute):
+            found[n.attr] += 1
+        elif isinstance(n, ast.alias):
+            found[n.name.rpartition(".")[2]] += 1
+        elif isinstance(n, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "__all__" for t in n.targets
+        ):
+            found.update(
+                e.value for e in ast.walk(n.value) if isinstance(e, ast.Constant)
+            )
+    return found
+
+
+def test_every_package_function_and_class_is_named_elsewhere():
+    files = [ROOT / "__spark_entry__.py"]
+    for folder in (PACKAGE, "jobs", "perfbench", "tools", "tests"):
+        files += sorted((ROOT / folder).rglob("*.py"))
+    named: Counter = Counter()
+    defs: list[tuple[Path, ast.AST]] = []
+    for path in files:
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        named.update(_names(tree))
+        if path.is_relative_to(ROOT / PACKAGE):
+            defs += [
+                (path, node)
+                for node in tree.body
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            ]
+    # uses inside a definition's own body (recursion) do not count
+    unnamed = sorted(
+        f"{path.relative_to(ROOT)}::{node.name}"
+        for path, node in defs
+        if named[node.name] == _names(node)[node.name]
+    )
+    assert not unnamed, f"functions and classes nothing names: {unnamed}"

@@ -123,18 +123,6 @@ def test_conv_fold_is_one_conv_shuffle_no_window(spark):
     assert "aggregate(" in plan and "collect_list" in plan
 
 
-def test_lm_score_has_no_window_and_broadcast_token_joins(spark):
-    """lm_score: per-token model lookups must be broadcast hash joins
-    (the n-gram model is bounded; the corpus side must never
-    sort-merge-shuffle per token), and the per-document mean must be a
-    two-phase aggregate, not a Window."""
-    plan = _plan(entry_mod.queries()["lm_score"](spark, SF_DIR), "simple")
-    assert "Window" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
-
-
 def test_no_rowwise_python_in_any_query(spark):
     """GLOBAL invariant: no driver query may contain a row-at-a-time
     Python UDF stage (BatchEvalPython) — Python is allowed only as

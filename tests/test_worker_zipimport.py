@@ -294,7 +294,6 @@ def test_every_python_stage_imports_the_package(spark, tmp_path, monkeypatch):
         minhash_signatures,
         simhash_signatures,
     )
-    from openccnet_spark.operators.quality_model import _moments
     from openccnet_spark.operators.repetition import repetition_signals
     from openccnet_spark.sources.textfiles import read_text_files
     from openccnet_spark.streaming import streaming_conversation_state
@@ -327,7 +326,6 @@ def test_every_python_stage_imports_the_package(spark, tmp_path, monkeypatch):
         "minhash_signatures": built(lambda: minhash_signatures(docs)),
         "_signatures_with_shingles": built(lambda: _signatures_with_shingles(docs)),
         "simhash_signatures": built(lambda: simhash_signatures(docs)),
-        "quality_model._moments": lambda: _moments,
         "repetition_signals": built(lambda: repetition_signals(docs)),
         "read_text_files": built(lambda: read_text_files(spark, str(tmp_path / "*.txt"))),
         "streaming_conversation_state": built(lambda: streaming_conversation_state(docs)),
