@@ -15,8 +15,10 @@ code-point ``(cap, min_len, length_bitmask)`` index, recomputed here in *code
 points* (never copied from the reference's UTF-16-unit metadata; Python
 strings are code-point sequences, see SURVEY.md §7).
 
-All of this is driver-side; the resulting ``DictionaryBundle`` is broadcast
-once per SparkSession and shared by every stage (SURVEY.md §4 P1-P3).
+Nothing is broadcast: the bundle ships inside the package, and each Python
+worker loads it lazily, once per process, through
+``functions._worker_converter`` (an ``lru_cache``), then builds each round's
+match index on first use; every stage in that worker shares them.
 """
 
 from __future__ import annotations

@@ -11,8 +11,15 @@ Design rules:
   the north_rule's "dictionary broadcasts shared across stages" property
   without re-pickling 65k entries into task closures. Custom-dictionary
   variants are keyed by their spec and cached the same way.
-* Relational work (lengths, ratios, regex scrub, keep/drop) stays in
-  JVM built-ins — see ``openccnet_spark.operators.quality``.
+* **String work rides the UDF; arithmetic stays in the JVM.** The
+  transcript pipeline computes its metrics (lengths, ratios) and the
+  regex scrub inside the one fused UDF (``pipeline_struct_udf``); the
+  raw-length pre-gate and the keep/drop CASE chain over the UDF's
+  metrics stay JVM built-ins — see ``openccnet_spark.operators.pipeline``.
+* **Driver-side Column expressions are built once per context.** Every
+  Column function is a py4j round trip, and applying a UDF pickles it
+  and snapshots the context's ``--py-files`` includes, so callers cache
+  the expressions they apply per job under ``context_key``.
 * **A worker re-reads no unchanged zip per task.** Unpickling any UDF here
   imports the package, whose ``__init__`` installs ``zipcache``'s
   stat-checked ``zipimporter.invalidate_caches`` in the worker (once per
@@ -62,6 +69,14 @@ def _freeze_custom(custom: list | None) -> tuple | None:
     if not custom:
         return None
     return tuple((s, m, t) for s, m, t in custom)
+
+
+def context_key(sc) -> tuple:
+    """Cache key for Column expressions built on the driver:
+    ``applicationId`` (a new SparkContext must never reuse a stopped one's
+    JVM objects) and the includes a UDF snapshots when it is applied (a
+    later ``addPyFile`` must reach the workers, so it needs a new UDF)."""
+    return sc.applicationId, tuple(sc._python_includes)
 
 
 def _map_udf(row_fn, return_type=StringType()):

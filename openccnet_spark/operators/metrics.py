@@ -10,8 +10,10 @@ metrics". Mechanism:
   partition overwrite, so reprocessing a bucket is idempotent
   (exactly-once per bucket). On Iceberg this maps to
   ``df.writeTo(tbl).overwritePartitions()``; this sandbox has no Iceberg
-  runtime jars, so the same semantics run on parquet via
-  ``spark.sql.sources.partitionOverwriteMode=dynamic``.
+  runtime jars, so the same semantics run on parquet via the data
+  write's ``partitionOverwriteMode=dynamic`` option (set on that one
+  write, not on the session: the caller's later overwrites keep their
+  own mode).
 * Resume = anti-join of all buckets against completed metrics rows
   (``status = 'done'``), the SURVEY §2.2 "Resume" stage. The metrics
   table is probed with Hadoop ``FileSystem.exists`` (``path_exists``):
@@ -47,10 +49,12 @@ from __future__ import annotations
 
 import os
 import time
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import context_key
 from .quality import DROP_RULES
 
 N_BUCKETS = 64
@@ -58,10 +62,15 @@ N_BUCKETS = 64
 OBSERVATION_TIMEOUT_S = 60.0
 
 
+@lru_cache(maxsize=32)
+def _bucket_column(ctx: tuple, n_buckets: int):
+    """``partition_id`` of a row, built once per ``(context_key, n_buckets)``."""
+    return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+
+
 def with_partition_id(df: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
-    return df.withColumn(
-        "partition_id", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    )
+    ctx = context_key(df.sparkSession.sparkContext)
+    return df.withColumn("partition_id", _bucket_column(ctx, n_buckets))
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
@@ -109,8 +118,10 @@ def observed(obs: Observation, run_id: str) -> dict:
     return obs.get
 
 
-def bucket_metrics(out: DataFrame) -> DataFrame:
-    """Per-bucket counters from the pipeline output (one aggregation)."""
+@lru_cache(maxsize=32)
+def _bucket_aggregates(ctx: tuple) -> tuple:
+    """``bucket_metrics``' aggregate expressions, built once per
+    ``context_key`` (each Column function is a py4j round trip)."""
     aggs = [
         F.count(F.lit(1)).alias("turns_seen"),
         F.sum(F.col("keep").cast("long")).alias("kept"),
@@ -121,10 +132,15 @@ def bucket_metrics(out: DataFrame) -> DataFrame:
             "scrubbed"
         ),
     ]
+    reason = F.col("drop_reason")
     for rule in DROP_RULES:
-        aggs.append(
-            F.sum((F.col("drop_reason") == rule).cast("long")).alias(f"dropped_{rule}")
-        )
+        aggs.append(F.sum((reason == rule).cast("long")).alias(f"dropped_{rule}"))
+    return tuple(aggs)
+
+
+def bucket_metrics(out: DataFrame) -> DataFrame:
+    """Per-bucket counters from the pipeline output (one aggregation)."""
+    aggs = _bucket_aggregates(context_key(out.sparkSession.sparkContext))
     return out.groupBy("partition_id").agg(*aggs)
 
 
@@ -146,7 +162,6 @@ def checkpointed_quality_filter(
 
     data_path = os.path.join(out_dir, "turns")
     metrics_path = os.path.join(out_dir, "metrics")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     src = with_partition_id(src, n_buckets)
     done = completed_buckets(spark, metrics_path)
@@ -173,14 +188,17 @@ def checkpointed_quality_filter(
     try:
         # Data first (idempotent dynamic partition overwrite); this one
         # action runs the pipeline and fills the cache...
-        out.write.mode("overwrite").partitionBy("partition_id").parquet(data_path)
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("partition_id")
+            .parquet(data_path)
+        )
         # ...then the lineage/metrics commit marks the buckets done, from
         # the cache (no read-back); the observation yields which buckets had
         # rows from the same append job.
-        m = (
-            bucket_metrics(out)
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("status", F.lit("done"))
+        m = bucket_metrics(out).withColumns(
+            {"run_id": F.lit(run_id), "status": F.lit("done")}
         )
         obs = Observation()
         (

@@ -20,16 +20,19 @@ worker per task); the keep/drop decision is then pure int/double
 arithmetic over the returned struct in whole-stage codegen. The salted repartition spreads the turns
 of pathologically long conversations across partitions (rows are per-turn,
 so hashing (conv_id, turn_idx) is a perfect salt — no key grouping is
-needed downstream).
+needed downstream). The expressions are built once per SparkContext and flag
+set; a job applies them in three DataFrame calls.
 """
 
 from __future__ import annotations
+
+from functools import lru_cache
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..convert import Converter
-from ..functions import pipeline_struct_udf
+from ..functions import _freeze_custom, context_key, pipeline_struct_udf
 from ..functions.langid import detect_language
 from ..functions.ppl import perplexity
 from .quality import (
@@ -45,11 +48,46 @@ from .quality import (
     scrub_text,
 )
 
-#: Output columns added by the pipeline (beyond the input schema).
+#: Columns appended to the input schema, in order (no ``ppl`` if not with_ppl).
 OUTPUT_COLUMNS = (
-    "text_converted", "lang", "ppl", "char_len", "word_cnt", "uniq_ratio",
-    "symbol_ratio", "drop_reason", "keep", "text_scrubbed",
+    "lang", "ppl", "char_len", "word_cnt", "uniq_ratio", "symbol_ratio",
+    "text_converted", "text_scrubbed", "drop_reason", "keep",
 )
+
+
+@lru_cache(maxsize=32)
+def _pipeline_columns(ctx: tuple, config, punct, with_ppl, normalize, detofu_level,
+                      custom_key, preserve_ids) -> tuple:
+    """``(fused, outputs)`` per ``functions.context_key`` and flag set: the
+    UDF applied to the pre-gated text, and ``(name, Column)`` pairs (not a
+    shared mutable dict) over its struct ``_r`` for ``OUTPUT_COLUMNS``."""
+    # Stage 1 — pre-gate on RAW length (JVM-only). Rows failing it carry a
+    # NULL into the UDF, which short-circuits on NULL: the expensive Python
+    # work never runs for them.
+    pre = pre_drop_expr(F.length(F.coalesce(F.col("text"), F.lit(""))))
+    # Stage 2 — ONE fused Arrow UDF (convert + langid + metrics + scrub +
+    # gated ppl) on surviving rows: one Python worker per task.
+    fused = pipeline_struct_udf(
+        config, punct, normalize_compat=normalize, detofu_level=detofu_level,
+        custom=custom_key, with_ppl=with_ppl, preserve_ids=preserve_ids,
+    )(F.when(pre.isNull(), F.col("text")))
+    r = F.col("_r")
+    outputs = {f: r[f] for f in OUTPUT_COLUMNS[:6] if with_ppl or f != "ppl"}
+    # Reconstitute the NULL-compressed strings (identity results travel as
+    # NULL over Arrow): processed rows have char_len set; pre-gated don't.
+    processed = r["char_len"].isNotNull()
+    outputs["text_converted"] = F.when(processed, F.coalesce(r["text_converted"], F.col("text")))
+    outputs["text_scrubbed"] = F.when(
+        processed, F.coalesce(r["text_scrubbed"], r["text_converted"], F.col("text"))
+    )
+    # Stage 3 — rule CASE chain (pure int/double arithmetic on the struct's
+    # metrics — no JVM string work in the hot path); first rule wins.
+    reasons = [pre, post_drop_expr(r)]
+    if with_ppl:
+        reasons.append(F.when((r["ppl"] > PPL_MAX) & (r["lang"] == "zh"), "high_ppl"))
+    outputs["drop_reason"] = F.coalesce(*reasons, F.lit("none"))
+    outputs["keep"] = outputs["drop_reason"] == "none"
+    return fused, tuple(outputs.items())
 
 
 def quality_filter(
@@ -66,55 +104,16 @@ def quality_filter(
     """Apply the full keep/drop + scrub pipeline. Purely columnar; one
     optional shuffle (the salted repartition) and no joins or aggregations
     — embarrassingly parallel by construction, which is what carries the
-    N -> 4N scaling-efficiency requirement.
+    N -> 4N scaling-efficiency requirement. Output: ``df.columns +
+    OUTPUT_COLUMNS``.
     """
     if salt_partitions:
         df = df.repartition(salt_partitions, F.hash("conv_id", "turn_idx"))
-    # Stage 1 — pre-gate on RAW length (JVM-only). Rows failing it carry a
-    # NULL into the UDFs, which short-circuit on NULL: the expensive Python
-    # work never runs for them. At web scale the too_long rule alone can
-    # gate off the bulk of the bytes.
-    raw_len = F.length(F.coalesce(F.col("text"), F.lit("")))
-    df = df.withColumn("pre_reason", pre_drop_expr(raw_len))
-    gated = F.when(F.col("pre_reason").isNull(), F.col("text"))
-    # Stage 2 — ONE fused Arrow UDF (convert + langid + gated ppl) on
-    # surviving rows: one Python worker per task, one Arrow round-trip.
-    fused = pipeline_struct_udf(
-        config, punct, normalize_compat=normalize,
-        detofu_level=detofu_level, custom=custom, with_ppl=with_ppl,
-        preserve_ids=preserve_ids,
+    fused, outputs = _pipeline_columns(
+        context_key(df.sparkSession.sparkContext), config, punct, with_ppl,
+        normalize, detofu_level, _freeze_custom(custom), preserve_ids,
     )
-    df = df.withColumn("_r", fused(gated))
-    for field in ("lang", "ppl", "char_len", "word_cnt", "uniq_ratio", "symbol_ratio"):
-        df = df.withColumn(field, F.col(f"_r.{field}"))
-    # Reconstitute the NULL-compressed strings (identity results travel as
-    # NULL over Arrow): processed rows have char_len set; pre-gated don't.
-    processed = F.col("_r.char_len").isNotNull()
-    df = df.withColumn(
-        "text_converted",
-        F.when(processed, F.coalesce(F.col("_r.text_converted"), F.col("text"))),
-    )
-    df = df.withColumn(
-        "text_scrubbed",
-        F.when(processed, F.coalesce(F.col("_r.text_scrubbed"), F.col("text_converted"))),
-    )
-    df = df.drop("_r")
-    # Stage 3 — rule CASE chain (JVM; pure int/double arithmetic on the
-    # struct's metric columns — no JVM string work in the hot path).
-    df = df.withColumn("post_reason", post_drop_expr())
-    if with_ppl:
-        ppl_reason = F.when(
-            (F.col("ppl") > PPL_MAX) & (F.col("lang") == "zh"), "high_ppl"
-        )
-    else:
-        df = df.drop("ppl")
-        ppl_reason = F.lit(None).cast("string")
-    df = df.withColumn(
-        "drop_reason",
-        F.coalesce(F.col("pre_reason"), F.col("post_reason"), ppl_reason, F.lit("none")),
-    ).drop("pre_reason", "post_reason")
-    df = df.withColumn("keep", F.col("drop_reason") == "none")
-    return df
+    return df.withColumn("_r", fused).withColumns(dict(outputs)).drop("_r")
 
 
 def reference_label(

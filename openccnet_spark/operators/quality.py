@@ -117,12 +117,14 @@ def pre_drop_expr(raw_len_col: Column) -> Column:
     )
 
 
-def post_drop_expr() -> Column:
-    """Heuristic rules on the converted text's metric columns (NULL == survives)."""
+def post_drop_expr(metrics: Column) -> Column:
+    """Heuristic rules on the converted text's metrics, the ``word_cnt``,
+    ``uniq_ratio`` and ``symbol_ratio`` fields of the struct ``metrics``
+    (NULL == survives)."""
     return F.when(
-        (F.col("word_cnt") >= REP_MIN_WORDS) & (F.col("uniq_ratio") < REP_UNIQUE_RATIO),
+        (metrics["word_cnt"] >= REP_MIN_WORDS) & (metrics["uniq_ratio"] < REP_UNIQUE_RATIO),
         "repetitive",
-    ).when(F.col("symbol_ratio") > SYMBOL_RATIO, "symbol_dense")
+    ).when(metrics["symbol_ratio"] > SYMBOL_RATIO, "symbol_dense")
 
 
 def lang_simple_col(col: Column) -> Column:
