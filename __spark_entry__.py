@@ -43,10 +43,7 @@ from openccnet_spark.sources.transcripts import (
     transcripts_sql,
 )
 
-_TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
+_TABLES = ("orders", "lineitem", "documents")
 
 
 _SHIPPED_SESSIONS: set = set()
@@ -178,83 +175,6 @@ def _q_zho_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [(i, t) for i, (t, _e) in enumerate(ZHO_CHECK_GOLDENS)]
     df = spark.createDataFrame(rows, "case_id int, input string")
     return df.select("case_id", zho_check_udf()("input").alias("zho"))
-
-
-def _q_metrics_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style aggregation (the metrics-rollup stage of SURVEY §2.2).
-
-    Money sums are floored to integer cents per-row before summing so both
-    engines add exact integers (order-independent)."""
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-            F.sum(F.floor(F.col("l_extendedprice") * 100).cast("long")).alias("sum_base_cents"),
-            F.sum(
-                F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("long")
-            ).alias("sum_disc_cents"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def _q_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scan + filter + project with predicate/column pushdown to parquet."""
-    li = _read(spark, sf_dir, "lineitem")
-    return li.filter(
-        (F.col("l_shipdate") >= F.lit("1995-01-01"))
-        & (F.col("l_shipdate") < F.lit("1996-01-01"))
-        & (F.col("l_discount") >= 0.05)
-        & (F.col("l_quantity") < 24)
-    ).select(
-        "l_orderkey", "l_linenumber",
-        F.floor(F.col("l_extendedprice") * F.col("l_discount") * 100)
-        .cast("long").alias("revenue_cents"),
-    )
-
-
-def _q_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Orders x customer x nation with explicit broadcast of the dims."""
-    orders = _read(spark, sf_dir, "orders")
-    cust = _read(spark, sf_dir, "customer")
-    nation = _read(spark, sf_dir, "nation")
-    return (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name", "c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.floor(F.col("o_totalprice") * 100).cast("long")).alias("total_cents"),
-        )
-    )
-
-
-def _q_window_first_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stable-ordering window (row_number per customer by date, tiebreak key)."""
-    from pyspark.sql.window import Window
-
-    orders = _read(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("o_custkey", F.col("o_orderkey").alias("first_orderkey"))
-    )
-
-
-def _q_antijoin_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The checkpoint-resume anti-join pattern: customers with no order
-    since 1997 ("pending buckets" = keys absent from the done-set)."""
-    cust = _read(spark, sf_dir, "customer")
-    recent = _read(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= F.lit("1997-01-01")
-    )
-    return cust.join(
-        recent, cust.c_custkey == recent.o_custkey, "left_anti"
-    ).select("c_custkey", "c_mktsegment")
 
 
 def _doubled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -725,23 +645,6 @@ def _q_textstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary top-50 (word -> count): the canonical heavy
-    shuffle — explode words, groupBy with map-side partial aggregation,
-    then distributed top-k (orderBy+limit = TakeOrdered, never a global
-    single-partition sort of the vocabulary)."""
-    from pyspark.sql.window import Window
-
-    docs = _read(spark, sf_dir, "documents")
-    words = docs.select(
-        F.explode(F.split(F.coalesce("text", F.lit("")), " ")).alias("w")
-    ).filter(F.col("w") != "")
-    counts = words.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
-    top = counts.orderBy(F.desc("n"), F.asc("w")).limit(50)
-    wnd = Window.orderBy(F.desc("n"), F.asc("w"))  # 50 rows: trivial window
-    return top.withColumn("rank", F.row_number().over(wnd).cast("int"))
-
-
 def _q_quality_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-language quality-score percentiles (p50/p90/p99) via the
     rank-at-ceil(p*n) definition — integer-exact in both engines (no
@@ -798,48 +701,6 @@ def _q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "format", "mode", "width", "height", "channels",
         "sum_r", "sum_g", "sum_b",
     )
-
-
-def _q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode (audiocodec: pure-Python RIFF/WAVE PCM parser):
-    deterministic synthetic 8/16-bit mono/stereo WAVs are materialized per
-    doc_id in a distributed mapInPandas (sample value = closed-form in
-    (doc_id, frame, channel)), then decoded by the same
-    `extract_audio_features` operator a production binary column takes.
-    The oracle recomputes sample_rate/channels/bits/n_samples and the
-    exact per-channel sample sums in closed-form SQL — a wrong decode
-    (sign mixup, channel de-interleave error, header misparse)
-    hash-fails."""
-    from openccnet_spark.operators.multimodal import (
-        extract_audio_features,
-        with_synth_audio_payload,
-    )
-
-    docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") % 11 == 5)
-    feats = extract_audio_features(with_synth_audio_payload(docs))
-    return feats.select(
-        "doc_id", "format", "sample_rate", "channels", "bits", "n_samples",
-        "sum_ch0", "sum_ch1",
-    )
-
-
-def _q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video frame decode (videocodec: pure-Python GIF87a/89a LZW +
-    palette compositing): deterministic synthetic animated GIFs are
-    materialized per doc_id in a distributed mapInPandas (palette index =
-    (doc_id+3x+5y+7f) mod 16, channel value affine in the index), then
-    frame-sampled (every 2nd frame) and feature-extracted by
-    `sample_video_frames` — the same operator a production binary video
-    column takes. The oracle recomputes frame count/size and the exact
-    per-sampled-frame RGB channel sums in closed-form SQL, so a wrong LZW
-    decode, palette lookup, frame offset or sampling stride hash-fails."""
-    from openccnet_spark.operators.multimodal import (
-        sample_video_frames,
-        with_synth_video_payload,
-    )
-
-    docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") % 17 == 3)
-    return sample_video_frames(with_synth_video_payload(docs), every_n=2)
 
 
 #: per-stratum sampling rates / token budgets for the curation queries —
@@ -1133,24 +994,6 @@ def _q_custom_dict(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window rollup over the events stream table (SURVEY §2.2)."""
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.window("ts", "1 hour").start.alias("window_start"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100).cast("long")).alias("value_cents"),
-        )
-        .select(
-            F.unix_timestamp("window_start").alias("window_epoch"),
-            "event_type", "n_events", "value_cents",
-        )
-    )
-
-
 def _q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe train/val/test split: near-dup pairs -> components ->
     cluster-keyed deterministic 90/5/5 draw, so a document and its
@@ -1223,24 +1066,6 @@ def _q_conv_render(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     folded = fold_tool_turns(spark_transcripts(spark, n_conv_for_sf(sf_dir)))
     return render_chat_template(folded)
-
-
-def _q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-min inactivity) per user via windows."""
-    from pyspark.sql.window import Window
-
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    new_session = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    return (
-        ev.withColumn("new_s", new_session)
-        .groupBy("user_id")
-        .agg(
-            F.sum("new_s").cast("long").alias("n_sessions"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
 
 
 def _replay_n_conv(sf_dir: str) -> int:
@@ -1330,96 +1155,6 @@ def _q_streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(root, "sink"))
 
 
-def _q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: 3-way join + filtered agg + deterministic top-10."""
-    cust = _read(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _read(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit("1995-03-15"))
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1995-03-15"))
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("long")
-            ).alias("revenue_cents")
-        )
-        .select(
-            "l_orderkey",
-            F.unix_timestamp("o_orderdate").alias("orderdate_epoch"),
-            "revenue_cents",
-        )
-        .orderBy(F.desc("revenue_cents"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
-def _q_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: 5-way star join -> per-nation revenue."""
-    region = _read(spark, sf_dir, "region")
-    nation = _read(spark, sf_dir, "nation")
-    cust = _read(spark, sf_dir, "customer")
-    supp = _read(spark, sf_dir, "supplier")
-    orders = _read(spark, sf_dir, "orders")
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .filter(supp.s_nationkey == cust.c_nationkey)
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("long")
-            ).alias("revenue_cents"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-def _q_topk_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic top-k (order/limit with total tiebreak)."""
-    orders = _read(spark, sf_dir, "orders")
-    return (
-        orders.groupBy("o_custkey")
-        .agg(F.sum(F.floor(F.col("o_totalprice") * 100).cast("long")).alias("spend_cents"))
-        .orderBy(F.desc("spend_cents"), F.asc("o_custkey"))
-        .limit(10)
-    )
-
-
-def _q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set operators: AUTOMOBILE customers EXCEPT those with an open order,
-    INTERSECTed with customers holding a positive balance."""
-    cust = _read(spark, sf_dir, "customer")
-    orders = _read(spark, sf_dir, "orders")
-    auto = cust.filter(F.col("c_mktsegment") == "AUTOMOBILE").select("c_custkey")
-    open_cust = orders.filter(F.col("o_orderstatus") == "O").select(
-        F.col("o_custkey").alias("c_custkey")
-    )
-    positive = cust.filter(F.col("c_acctbal") > 0).select("c_custkey")
-    return auto.exceptAll(open_cust).distinct().intersect(positive)
-
-
-def _q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP over (returnflag, linestatus) with grouping id."""
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "n", "sum_qty",
-        )
-    )
-
-
 def _q_zho_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Script detection (O11) at table scale over synthesized transcripts."""
     from openccnet_spark.functions import zho_check_udf
@@ -1490,39 +1225,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_bloom_prefilter": _armed(_q_dedup_bloom_prefilter),
         "pdf_reflow_convert": _armed(_q_pdf_reflow_convert),
         "office_convert": _armed(_q_office_convert),
-        # ======================= position 50 cutoff ========================
-        # Everything below has driver-green history (r5-r7) and stays pinned
-        # by tests/test_entry_contract.py's oracle replay.
+        # -- driver-green history (r5-r7) ------------------------------------
         "zho_check_goldens": _armed(_q_zho_check),
         "st_ts_goldens": _armed(_q_st_ts),
         "normalize_detofu_goldens": _armed(_q_normalize_detofu),
         "textfiles_encodings": _armed(_q_textfiles_encodings),
         "ids_preserve_goldens": _armed(_q_ids_preserve),
         "custom_dict_convert": _armed(_q_custom_dict),
-        "events_window": _armed(_q_events_window),
-        "events_sessionize": _armed(_q_events_sessionize),
         "shard_manifest": _armed(_q_shard_manifest),
         "zho_check_transcripts": _armed(_q_zho_transcripts),
-        "topk_customers": _armed(_q_topk_customers),
-        "shipping_priority": _armed(_q_shipping_priority),
-        "nation_volume": _armed(_q_nation_volume),
-        "set_ops": _armed(_q_set_ops),
-        "grouping_sets": _armed(_q_grouping_sets),
-        "metrics_rollup": _armed(_q_metrics_rollup),
-        "filter_project": _armed(_q_filter_project),
-        "broadcast_join": _armed(_q_broadcast_join),
-        "window_first_order": _armed(_q_window_first_order),
-        "antijoin_resume": _armed(_q_antijoin_resume),
         "dedup_exact_prehash": _armed(_q_dedup_exact_prehash),
         "dedup_ngram_jaccard": _armed(_q_dedup_ngram_jaccard),
         "skew_join_priority": _armed(_q_skew_join_priority),
         "textstats": _armed(_q_textstats),
-        "vocab_topk": _armed(_q_vocab_topk),
         "quality_quantiles": _armed(_q_quality_quantiles),
         "multimodal_features": _armed(_q_multimodal_features),
         "multimodal_decode": _armed(_q_multimodal_decode),
-        "multimodal_audio": _armed(_q_multimodal_audio),
-        "multimodal_video": _armed(_q_multimodal_video),
         "decontaminate_ngram": _armed(_q_decontaminate_ngram),
         "sample_stratified": _armed(_q_sample_stratified),
         "quality_repetition": _armed(_q_quality_repetition),
@@ -1630,47 +1348,6 @@ def oracle_sql() -> dict[str, str]:
             else {}
         ),
         "zho_check_goldens": _zho_oracle(),
-        "metrics_rollup": """
-SELECT l_returnflag, l_linestatus,
-       sum(l_quantity::BIGINT)::BIGINT AS sum_qty,
-       sum(floor(l_extendedprice * 100)::BIGINT)::BIGINT AS sum_base_cents,
-       sum(floor(l_extendedprice * (1 - l_discount) * 100)::BIGINT)::BIGINT AS sum_disc_cents,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-""",
-        "filter_project": """
-SELECT l_orderkey, l_linenumber,
-       floor(l_extendedprice * l_discount * 100)::BIGINT AS revenue_cents
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-  AND l_shipdate < TIMESTAMP '1996-01-01'
-  AND l_discount >= 0.05 AND l_quantity < 24
-""",
-        "broadcast_join": """
-SELECT n_name, c_mktsegment,
-       count(*) AS n_orders,
-       sum(floor(o_totalprice * 100)::BIGINT)::BIGINT AS total_cents
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name, c_mktsegment
-""",
-        "window_first_order": """
-SELECT o_custkey, first_orderkey FROM (
-  SELECT o_custkey, o_orderkey AS first_orderkey,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY o_orderdate, o_orderkey) AS rn
-  FROM orders
-) WHERE rn = 1
-""",
-        "antijoin_resume": """
-SELECT c_custkey, c_mktsegment FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-                  AND o_orderdate >= TIMESTAMP '1997-01-01')
-""",
         "dedup_exact": """
 WITH d AS (
   SELECT doc_id, text FROM documents
@@ -1700,7 +1377,6 @@ FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
 GROUP BY o.o_orderpriority
 """,
         "textstats": _textstats_oracle(),
-        "vocab_topk": _vocab_topk_oracle(),
         "quality_quantiles": _quality_quantiles_oracle(),
         "multimodal_features": """
 SELECT doc_id,
@@ -1743,68 +1419,6 @@ FROM imgs i
 JOIN sums r ON r.doc_id = i.doc_id AND r.c = 0
 LEFT JOIN sums g ON g.doc_id = i.doc_id AND g.c = 1
 LEFT JOIN sums b ON b.doc_id = i.doc_id AND b.c = 2
-""",
-        "multimodal_audio": """
-WITH au AS (
-  SELECT doc_id,
-         (200 + doc_id % 331)::BIGINT AS n_samples,
-         (8000 + (doc_id % 5) * 1000)::INT AS sample_rate,
-         (1 + doc_id % 2)::INT AS channels,
-         (CASE WHEN doc_id % 3 = 0 THEN 8 ELSE 16 END)::INT AS bits
-  FROM documents WHERE doc_id % 11 = 5
-),
-sums AS (
-  SELECT a.doc_id, c.c,
-         sum(CASE WHEN a.bits = 8
-                  THEN (a.doc_id * 13 + 7 * i.i + 11 * c.c) % 256
-                  ELSE (a.doc_id * 13 + 7 * i.i + 11 * c.c) % 4096 - 2048
-             END)::BIGINT AS s
-  FROM au a
-  CROSS JOIN generate_series(0, 530) AS i(i)
-  CROSS JOIN generate_series(0, 1) AS c(c)
-  WHERE i.i < a.n_samples AND c.c < a.channels
-  GROUP BY 1, 2
-)
-SELECT a.doc_id, 'wav' AS format, a.sample_rate, a.channels, a.bits,
-       a.n_samples,
-       s0.s AS sum_ch0,
-       coalesce(s1.s, s0.s) AS sum_ch1
-FROM au a
-JOIN sums s0 ON s0.doc_id = a.doc_id AND s0.c = 0
-LEFT JOIN sums s1 ON s1.doc_id = a.doc_id AND s1.c = 1
-""",
-        # closed-form replay of multimodal.synth_video_payload + GIF decode
-        # + every-2nd-frame sampling: geometry/frame count from doc_id,
-        # per-frame RGB sums by folding palette(idx) over the (x, y) grid.
-        # Palette channels are affine-mod-256 in the index (17i, 29i, 43i).
-        "multimodal_video": """
-WITH vids AS (
-  SELECT doc_id,
-         (8 + doc_id % 9)::INT AS width,
-         (6 + doc_id % 5)::INT AS height,
-         (4 + doc_id % 7)::INT AS n_frames
-  FROM documents WHERE doc_id % 17 = 3
-),
-frames AS (
-  SELECT v.doc_id, v.width, v.height, v.n_frames, f.f::INT AS frame_idx
-  FROM vids v CROSS JOIN generate_series(0, 9) AS f(f)
-  WHERE f.f < v.n_frames AND f.f % 2 = 0
-),
-sums AS (
-  SELECT fr.doc_id, fr.frame_idx,
-         sum((17 * ((fr.doc_id + 3 * x.x + 5 * y.y + 7 * fr.frame_idx) % 16)) % 256)::BIGINT AS sum_r,
-         sum((29 * ((fr.doc_id + 3 * x.x + 5 * y.y + 7 * fr.frame_idx) % 16)) % 256)::BIGINT AS sum_g,
-         sum((43 * ((fr.doc_id + 3 * x.x + 5 * y.y + 7 * fr.frame_idx) % 16)) % 256)::BIGINT AS sum_b
-  FROM frames fr
-  CROSS JOIN generate_series(0, 15) AS x(x)
-  CROSS JOIN generate_series(0, 9) AS y(y)
-  WHERE x.x < fr.width AND y.y < fr.height
-  GROUP BY 1, 2
-)
-SELECT fr.doc_id, 'gif' AS format, fr.n_frames, fr.width, fr.height,
-       fr.frame_idx, 4::INT AS delay_cs, s.sum_r, s.sum_g, s.sum_b
-FROM frames fr
-JOIN sums s ON s.doc_id = fr.doc_id AND s.frame_idx = fr.frame_idx
 """,
         # full replay of curation.decontaminate: same 13-grams, same
         # md5-prefix 60-bit hashes, same distinct-hit counts
@@ -1879,86 +1493,12 @@ SELECT doc_id, lang, n_tokens FROM c WHERE cum <= budget
             "case_id::INT AS case_id, output",
             "case_id, output",
         ),
-        "events_window": """
-SELECT epoch(time_bucket(INTERVAL 1 HOUR, ts))::BIGINT AS window_epoch,
-       event_type,
-       count(*) AS n_events,
-       sum(floor(value * 100)::BIGINT)::BIGINT AS value_cents
-FROM events GROUP BY 1, 2
-""",
-        "events_sessionize": """
-WITH g AS (
-  SELECT user_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   -- floor() each side: the Spark query computes the gap
-                   -- from unix_timestamp (whole-second truncation), so the
-                   -- oracle must truncate identically or a gap straddling
-                   -- the 1800 s boundary by a sub-second fraction
-                   -- hash-mismatches (computed values never cross the
-                   -- comparison raw)
-                   OR floor(epoch(ts)) - floor(epoch(lag(ts) OVER w)) > 1800
-              THEN 1 ELSE 0 END AS new_s
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT user_id, sum(new_s)::BIGINT AS n_sessions, count(*) AS n_events
-FROM g GROUP BY user_id
-""",
         "streaming_dedup_replay": _streaming_replay_oracle("sf0.01"),
         "zho_check_transcripts": _zho_transcripts_oracle("sf0.01"),
         "conv_fold_tools": _conv_fold_oracle("sf0.01"),
         "conv_gate": _conv_gate_oracle("sf0.01"),
         "conv_dedup_exact": _conv_dedup_oracle("sf0.01"),
         "conv_render": _conv_render_oracle("sf0.01"),
-        "shipping_priority": """
-SELECT l_orderkey,
-       epoch(o_orderdate)::BIGINT AS orderdate_epoch,
-       sum(floor(l_extendedprice * (1 - l_discount) * 100)::BIGINT)::BIGINT AS revenue_cents
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1995-03-15'
-  AND l_shipdate > TIMESTAMP '1995-03-15'
-GROUP BY l_orderkey, o_orderdate
-ORDER BY revenue_cents DESC, l_orderkey ASC LIMIT 10
-""",
-        "nation_volume": """
-SELECT r_name, n_name,
-       sum(floor(l_extendedprice * (1 - l_discount) * 100)::BIGINT)::BIGINT AS revenue_cents,
-       count(*) AS n_items
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE s_nationkey = c_nationkey
-GROUP BY r_name, n_name
-""",
-        "topk_customers": """
-SELECT o_custkey, sum(floor(o_totalprice * 100)::BIGINT)::BIGINT AS spend_cents
-FROM orders GROUP BY o_custkey
-ORDER BY spend_cents DESC, o_custkey ASC LIMIT 10
-""",
-        # NB: INTERSECT binds tighter than EXCEPT in SQL — parenthesize so
-        # the oracle evaluates (A EXCEPT B) INTERSECT C like the Spark side.
-        "set_ops": """
-SELECT c_custkey FROM (
-  SELECT c_custkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE'
-  EXCEPT
-  SELECT o_custkey AS c_custkey FROM orders WHERE o_orderstatus = 'O'
-)
-INTERSECT
-SELECT c_custkey FROM customer WHERE c_acctbal > 0
-""",
-        "grouping_sets": """
-SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-       coalesce(l_linestatus, 'ALL') AS linestatus,
-       count(*) AS n,
-       sum(l_quantity::BIGINT)::BIGINT AS sum_qty
-FROM lineitem
-GROUP BY ROLLUP (l_returnflag, l_linestatus)
-""",
         "dedup_exact_prehash": """
 WITH d AS (
   SELECT doc_id, text FROM documents
@@ -2335,15 +1875,6 @@ SELECT DISTINCT a.doc_id AS a, b.doc_id AS b,
 FROM surv a JOIN surv b ON a.band_i = b.band_i AND a.band_v = b.band_v
                        AND a.doc_id < b.doc_id
 WHERE bit_count(xor(a.sig, b.sig)) <= 3
-"""
-
-
-def _vocab_topk_oracle() -> str:
-    return """
-WITH w AS (SELECT unnest(string_split(coalesce(text, ''), ' ')) AS w FROM documents),
-c AS (SELECT w, count(*)::BIGINT AS n FROM w WHERE w <> '' GROUP BY w),
-r AS (SELECT w, n, row_number() OVER (ORDER BY n DESC, w) AS rank FROM c)
-SELECT w, n, rank::INT AS rank FROM r WHERE rank <= 50
 """
 
 

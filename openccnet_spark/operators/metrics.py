@@ -158,6 +158,8 @@ def checkpointed_quality_filter(
     Each bucket is written by one task, so the data write runs at most
     ``n_buckets`` tasks in parallel (see the module docstring).
     """
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     from .pipeline import quality_filter
 
     data_path = os.path.join(out_dir, "turns")

@@ -1,17 +1,14 @@
-"""Multimodal columns: opaque binary payloads + real image & audio decode.
+"""Multimodal columns: opaque binary payloads + real image decode.
 
-Image/audio/video payloads are ``binary`` columns with a small typed
-metadata struct. Feature extraction is a narrow ``mapInPandas`` pass: the
-payload is sniffed by magic and, for PNG/BMP, decoded with the repo's
-self-contained pure-Python codec (``openccnet_spark.imagecodec`` — zlib
-inflate + all five PNG filters + palette/gray/alpha modes, BMP BI_RGB),
-emitting real width/height/channels/mode plus exact per-channel pixel
-sums; RIFF/WAVE PCM payloads decode via ``openccnet_spark.audiocodec``
-(8/16-bit, any channel count), emitting sample_rate/channels/bits/
-n_samples plus exact per-channel sample sums. Payloads that are neither
-(video, arbitrary blobs) degrade honestly to byte-level features with
-``format='opaque'`` and NULL media fields — a documented fallback, not a
-stub; video frame-sampling keeps its plumbing-only contract below.
+Image payloads are ``binary`` columns with a small typed metadata struct.
+Feature extraction is a narrow ``mapInPandas`` pass: the payload is
+sniffed by magic and, for PNG/BMP, decoded with the repo's self-contained
+pure-Python codec (``openccnet_spark.imagecodec`` — zlib inflate + all
+five PNG filters + palette/gray/alpha modes, BMP BI_RGB), emitting real
+width/height/channels/mode plus exact per-channel pixel sums. Payloads
+that are not images (arbitrary blobs) degrade honestly to byte-level
+features with ``format='opaque'`` and NULL media fields — a documented
+fallback, not a stub.
 
 Scale notes: payloads never shuffle — extraction is narrow over the scan;
 the output is a slim typed frame that IS safe to shuffle/join downstream.
@@ -27,18 +24,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..audiocodec import AudioDecodeError, decode_audio, encode_wav
 from ..imagecodec import ImageDecodeError, decode_image, encode_bmp, encode_png
 
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes long, checksum long, format string, mode string, "
     "width int, height int, channels int, sum_r long, sum_g long, sum_b long"
-)
-
-AUDIO_FEATURE_SCHEMA = (
-    "doc_id long, n_bytes long, checksum long, format string, "
-    "sample_rate int, channels int, bits int, n_samples long, "
-    "sum_ch0 long, sum_ch1 long"
 )
 
 
@@ -142,90 +132,9 @@ def extract_image_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.select(id_col, "payload").mapInPandas(_extract, FEATURE_SCHEMA)
 
 
-def synth_audio_payload(doc_id: int) -> bytes:
-    """Deterministic synthetic WAV for ``doc_id``: sample rate, channel
-    count, bit depth, length and every sample value are closed-form
-    functions of ``doc_id``, so an oracle recomputes the decoded metadata
-    and exact per-channel sums in pure SQL (see __spark_entry__
-    ``multimodal_audio``). Sample formula (frame i, channel c):
-
-        16-bit: v = ((doc_id*13 + 7*i + 11*c) mod 4096) - 2048   (signed)
-         8-bit: v =  (doc_id*13 + 7*i + 11*c) mod 256            (unsigned)
-    """
-    n = 200 + doc_id % 331
-    rate = 8000 + (doc_id % 5) * 1000
-    channels = 1 + doc_id % 2
-    bits = 8 if doc_id % 3 == 0 else 16
-    base = doc_id * 13
-    samples = []
-    for i in range(n):
-        vi = base + 7 * i
-        for c in range(channels):
-            v = vi + 11 * c
-            samples.append(v % 256 if bits == 8 else (v % 4096) - 2048)
-    return encode_wav(rate, channels, bits, samples)
-
-
-def with_synth_audio_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Narrow mapInPandas pass materializing ``synth_audio_payload`` per id.
-    Distributed — no driver-side audio building, no shuffle."""
-
-    def _synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": [synth_audio_payload(int(d)) for d in pdf[id_col]],
-                }
-            )
-
-    return df.select(id_col).mapInPandas(_synth, f"{id_col} long, payload binary")
-
-
-def _audio_features_one(doc_id, payload: bytes) -> tuple:
-    n = len(payload)
-    crc = zlib.crc32(payload)
-    try:
-        au = decode_audio(payload)
-    except AudioDecodeError:
-        return (doc_id, n, crc, "opaque", None, None, None, None, None, None)
-    s0, s1 = au.channel_sums()
-    return (
-        doc_id, n, crc, au.format,
-        au.sample_rate, au.channels, au.bits, au.n_samples, s0, s1,
-    )
-
-
-def extract_audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Narrow mapInPandas pass: payload -> decoded audio features.
-
-    Same shape as ``extract_image_features``: one Arrow round-trip, no
-    shuffle, real RIFF/WAVE PCM decode (audiocodec), ``opaque`` fallback
-    with NULL audio fields for payloads that are not supported audio.
-    Output is a slim typed frame safe to shuffle/join downstream."""
-
-    def _extract(batches):
-        for pdf in batches:
-            rows = [
-                _audio_features_one(did, p if p is not None else b"")
-                for did, p in zip(pdf[id_col], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "n_bytes", "checksum", "format",
-                    "sample_rate", "channels", "bits", "n_samples",
-                    "sum_ch0", "sum_ch1",
-                ],
-            )
-
-    return df.select(id_col, "payload").mapInPandas(_extract, AUDIO_FEATURE_SCHEMA)
-
-
 def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
     """Video-style frame sampling plumbing: expand (doc_id, n_frames) into
-    sampled frame indexes WITHOUT decoding (pure column math); the real
-    decode of selected frames is ``sample_video_frames`` below. n_frames
+    sampled frame indexes WITHOUT decoding (pure column math). n_frames
     is derived from payload length (the decode-free plan shape)."""
     return (
         df.withColumn("n_frames", (F.length("payload") % 300 + 1).cast("int"))
@@ -235,100 +144,3 @@ def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
         )
         .select("doc_id", "n_frames", "frame_idx")
     )
-
-
-# -- video: real GIF frame decode + sampling ---------------------------------
-
-VIDEO_FEATURE_SCHEMA = (
-    "doc_id long, format string, n_frames int, width int, height int, "
-    "frame_idx int, delay_cs int, sum_r long, sum_g long, sum_b long"
-)
-
-#: closed-form palette for synthetic GIF fixtures: channel values are
-#: affine in the palette index mod 256 (SQL-recomputable)
-_SYNTH_PALETTE = [((17 * i) % 256, (29 * i) % 256, (43 * i) % 256) for i in range(16)]
-
-
-def synth_video_payload(doc_id: int) -> bytes:
-    """Deterministic animated GIF for ``doc_id``: frame count, size and
-    every palette index are closed-form functions of ``doc_id``, so an
-    oracle recomputes per-sampled-frame channel sums in pure SQL (see
-    __spark_entry__ ``multimodal_video``). Index formula (frame f, x, y):
-
-        idx(f, x, y) = (doc_id + 3*x + 5*y + 7*f) mod 16
-    """
-    from ..videocodec import encode_gif
-
-    w = 8 + doc_id % 9
-    h = 6 + doc_id % 5
-    n_frames = 4 + doc_id % 7
-    frames = []
-    for f in range(n_frames):
-        base = doc_id + 7 * f
-        fr = bytearray(w * h)
-        i = 0
-        for y in range(h):
-            ry = base + 5 * y
-            for x in range(w):
-                fr[i] = (ry + 3 * x) % 16
-                i += 1
-        frames.append(bytes(fr))
-    return encode_gif(w, h, _SYNTH_PALETTE, frames, delay_cs=4)
-
-
-def with_synth_video_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Narrow mapInPandas pass materializing ``synth_video_payload`` per id."""
-
-    def _synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": [synth_video_payload(int(d)) for d in pdf[id_col]],
-                }
-            )
-
-    return df.select(id_col).mapInPandas(_synth, f"{id_col} long, payload binary")
-
-
-def sample_video_frames(
-    df: DataFrame, every_n: int = 2, id_col: str = "doc_id"
-) -> DataFrame:
-    """Real frame sampling: decode the GIF payload, keep every ``every_n``-th
-    frame, emit per-frame features (exact RGB channel sums). One narrow
-    mapInPandas pass — payloads never shuffle. The stream is decoded once
-    and sampled from (GIF frames composite onto the prior frame, so
-    earlier frames must be decoded regardless; sampling saves the feature
-    work and the output volume, which is what grows downstream).
-    Non-video payloads degrade to one ``opaque`` row with NULL frame
-    fields."""
-    from ..videocodec import VideoDecodeError, decode_video
-
-    def _extract(batches):
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    vid = decode_video(bytes(p) if p is not None else b"")
-                except VideoDecodeError:
-                    rows.append(
-                        (did, "opaque", None, None, None, None, None, None, None, None)
-                    )
-                    continue
-                for fr in vid.frames[::every_n]:
-                    r, g, b = fr.channel_sums()
-                    rows.append(
-                        (
-                            did, vid.format, len(vid.frames), vid.width,
-                            vid.height, fr.index, fr.delay_cs, r, g, b,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "format", "n_frames", "width", "height",
-                    "frame_idx", "delay_cs", "sum_r", "sum_g", "sum_b",
-                ],
-            )
-
-    return df.select(id_col, "payload").mapInPandas(_extract, VIDEO_FEATURE_SCHEMA)

@@ -12,10 +12,7 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF_DIR = "/root/testdata/sf0.01"
-_TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
+_TABLES = ("orders", "lineitem", "documents")
 
 
 @pytest.fixture(scope="module")

@@ -1,8 +1,8 @@
 """The one-pass commit of ``checkpointed_quality_filter``: metrics rows
 computed from the cached output equal the read-back aggregate, each bucket
 is written as one file, the cached frame never outlives the call, an empty
-batch returns, and the metrics-table probe fails loudly on a table it
-cannot read."""
+batch returns, a bucket count below one raises, and the metrics-table probe
+fails loudly on a table it cannot read."""
 
 from __future__ import annotations
 
@@ -141,6 +141,19 @@ def test_empty_batch_returns(spark, tmp_path):
         raise result["error"]
     assert result["r"] == {"processed": [], "skipped": []}
     assert completed_buckets(spark, f"{out_dir}/metrics") == set()
+
+
+@pytest.mark.parametrize("n_buckets", [0, -3])
+def test_no_buckets_raises_before_reading(spark, tmp_path, n_buckets):
+    """``n_buckets < 1`` leaves no bucket to run: the call raises instead
+    of returning ``processed == []``, and writes nothing."""
+    out_dir = tmp_path / "none"
+    src = spark_transcripts(spark, N_CONV)
+    with pytest.raises(ValueError, match="n_buckets"):
+        checkpointed_quality_filter(
+            spark, src, str(out_dir), run_id="n", n_buckets=n_buckets, with_ppl=False
+        )
+    assert not out_dir.exists()
 
 
 def test_completed_buckets_raises_on_unreadable_table(spark, tmp_path):

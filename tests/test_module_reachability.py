@@ -8,10 +8,16 @@ absolute or relative — through repo-local files, and assert that each
 tests import is dead code; deleting a feature must take its modules along.
 
 A second walk checks one level down: every top-level function and class of
-the package must be named somewhere other than its own definition — in the
-package, the entry points or the tests (a name listed in a module's
-``__all__`` is public API and counts). Deleting a caller must take the
-helpers that only it used along.
+the package and of the driver contract must be named somewhere other than
+its own definition — in the package, the entry points or the tests (a name
+listed in a module's ``__all__`` is public API and counts). Deleting a
+caller must take the helpers that only it used along; deleting a driver
+query must take its oracle helpers along.
+
+A third check keeps the driver contract about the engine: every query in
+``__spark_entry__.queries()`` must reach a name imported from the package,
+directly or through a top-level helper of the driver file. A query that
+reaches none tests Spark, not the engine.
 """
 
 from __future__ import annotations
@@ -22,6 +28,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = "openccnet_spark"
+DRIVER = ROOT / "__spark_entry__.py"
 
 
 def _module_name(path: Path) -> str:
@@ -72,7 +79,7 @@ def _roots() -> list[Path]:
     roots += sorted((ROOT / "jobs").glob("*.py"))
     roots += sorted((ROOT / "perfbench").glob("*.py"))  # perfbench/tests/ is not a root
     roots += sorted((ROOT / "tools").glob("*.py"))
-    roots.append(ROOT / "__spark_entry__.py")
+    roots.append(DRIVER)
     return roots
 
 
@@ -118,7 +125,7 @@ def _names(node: ast.AST) -> Counter:
 
 
 def test_every_package_function_and_class_is_named_elsewhere():
-    files = [ROOT / "__spark_entry__.py"]
+    files = [DRIVER]
     for folder in (PACKAGE, "jobs", "perfbench", "tools", "tests"):
         files += sorted((ROOT / folder).rglob("*.py"))
     named: Counter = Counter()
@@ -126,7 +133,7 @@ def test_every_package_function_and_class_is_named_elsewhere():
     for path in files:
         tree = ast.parse(path.read_text(encoding="utf-8"))
         named.update(_names(tree))
-        if path.is_relative_to(ROOT / PACKAGE):
+        if path == DRIVER or path.is_relative_to(ROOT / PACKAGE):
             defs += [
                 (path, node)
                 for node in tree.body
@@ -139,3 +146,55 @@ def test_every_package_function_and_class_is_named_elsewhere():
         if named[node.name] == _names(node)[node.name]
     )
     assert not unnamed, f"functions and classes nothing names: {unnamed}"
+
+
+def _package_bindings(nodes) -> set[str]:
+    """Names that the import statements among ``nodes`` bind from the
+    package."""
+    found: set[str] = set()
+    for n in nodes:
+        if isinstance(n, ast.ImportFrom) and not n.level and n.module.split(".")[0] == PACKAGE:
+            found.update(a.asname or a.name for a in n.names)
+        elif isinstance(n, ast.Import):
+            found.update(
+                a.asname or PACKAGE for a in n.names if a.name.split(".")[0] == PACKAGE
+            )
+    return found
+
+
+def _dict_items(node: ast.AST):
+    """(key, value) pairs of a dict display, through ``**`` expansions of
+    conditional dict displays."""
+    if isinstance(node, ast.Dict):
+        for k, v in zip(node.keys, node.values):
+            if k is None:
+                yield from _dict_items(v)
+            else:
+                yield k.value, v
+    elif isinstance(node, ast.IfExp):
+        yield from _dict_items(node.body)
+        yield from _dict_items(node.orelse)
+
+
+def test_every_driver_query_calls_package_code():
+    tree = ast.parse(DRIVER.read_text(encoding="utf-8"))
+    imported = _package_bindings(tree.body)
+    funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    uses = {
+        name: {n.id for n in ast.walk(fn) if isinstance(n, ast.Name)}
+        for name, fn in funcs.items()
+    }
+    reaching = {
+        name
+        for name, fn in funcs.items()
+        if uses[name] & imported or _package_bindings(ast.walk(fn))
+    }
+    while grown := {name for name in funcs if uses[name] & reaching} - reaching:
+        reaching |= grown
+    (ret,) = [n for n in ast.walk(funcs["queries"]) if isinstance(n, ast.Return)]
+    engine_free = sorted(
+        key
+        for key, value in _dict_items(ret.value)
+        if not {n.id for n in ast.walk(value) if isinstance(n, ast.Name)} & reaching
+    )
+    assert not engine_free, f"driver queries that call no package code: {engine_free}"
