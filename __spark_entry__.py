@@ -43,7 +43,7 @@ from openccnet_spark.sources.transcripts import (
     transcripts_sql,
 )
 
-_TABLES = ("orders", "lineitem", "documents")
+_TABLES = ("documents",)
 
 
 _SHIPPED_SESSIONS: set = set()
@@ -447,37 +447,6 @@ def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _q_skew_join_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-defeating salted join: lineitem (skewed side, salted on its
-    line number so a hot order spreads over 8 reducers) joined to orders,
-    revenue cents per order priority. Salting changes the shuffle layout,
-    not the semantics — the oracle is the PLAIN join + aggregate."""
-    from openccnet_spark.operators.skew import salted_join
-
-    li = _read(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_extendedprice", "l_discount"
-    )
-    orders = _read(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    joined = salted_join(
-        li.withColumnRenamed("l_orderkey", "o_orderkey"),
-        orders,
-        on=["o_orderkey"],
-        salt_from=F.col("l_linenumber"),
-        n_salt=8,
-    )
-    return (
-        joined.groupBy("o_orderpriority")
-        .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
-                    "long"
-                )
-            ).alias("revenue_cents"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
-
-
 #: (case_id, pages, builder kwargs, pdf_to_text kwargs, expected) — the PDF
 #: frontend driven end-to-end: parse -> extract -> reflow -> convert
 #: (reference PdfCommand.cs:211-247; expected strings hand-verified)
@@ -667,42 +636,6 @@ def _q_quality_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_quantiles_frame(_read(spark, sf_dir, "documents"))
 
 
-def _q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-payload plumbing over NON-image payloads (UTF-8 text bytes):
-    the decoder must take the documented ``opaque`` fallback — NULL image
-    fields, byte length preserved. checksum is crc32 (not SQL-expressible)
-    => excluded."""
-    from openccnet_spark.operators.multimodal import (
-        extract_image_features,
-        with_binary_payload,
-    )
-
-    feats = extract_image_features(with_binary_payload(_read(spark, sf_dir, "documents")))
-    return feats.select("doc_id", "n_bytes", "format", "mode", "width", "height")
-
-
-def _q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode (imagecodec: pure-Python PNG inflate+unfilter, BMP
-    BI_RGB): deterministic synthetic PNG-RGB / PNG-gray / BMP payloads are
-    materialized per doc_id in a distributed mapInPandas (pixel value =
-    (doc_id*7+3x+5y+11c) mod 256, PNG row filter = doc_id%5), then decoded
-    by the same `extract_image_features` operator a production binary
-    column takes. The oracle recomputes width/height/channels/mode and the
-    exact per-channel pixel sums in closed-form SQL — a wrong decode (bad
-    filter reversal, palette/BGR mixup, row-order flip) hash-fails."""
-    from openccnet_spark.operators.multimodal import (
-        extract_image_features,
-        with_synth_image_payload,
-    )
-
-    docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") % 13 == 0)
-    feats = extract_image_features(with_synth_image_payload(docs))
-    return feats.select(
-        "doc_id", "format", "mode", "width", "height", "channels",
-        "sum_r", "sum_g", "sum_b",
-    )
-
-
 #: per-stratum sampling rates / token budgets for the curation queries —
 #: chosen so every code path is exercised at sf0.01: partially-filled
 #: strata (en, zh), a fully-kept stratum (fr), a small-budget stratum
@@ -823,22 +756,6 @@ def _q_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = pack_chunks(docs, _PACK_WINDOW, persist=True, handles=handles)
     out._persist_handles = handles  # released by the caller; see queries()
     return out
-
-
-_SHARD_TOKENS = 1000
-
-
-def _q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic training-shard assignment + manifest
-    (operators/shards.py): shard = the packing chunk of each doc's exact
-    global start offset (doc-granular, same-membership on any
-    partitioning — the property a resumable training loader needs);
-    manifest digests are order-free bit_xor of 60-bit doc hashes. The
-    oracle is the naive single-window prefix sum grouped identically."""
-    from openccnet_spark.operators.shards import shard_manifest
-
-    docs = _read(spark, sf_dir, "documents")
-    return shard_manifest(docs, _SHARD_TOKENS)
 
 
 _BLOOM_M_BITS = 1 << 10  # deliberately tiny so false positives are
@@ -1232,15 +1149,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "textfiles_encodings": _armed(_q_textfiles_encodings),
         "ids_preserve_goldens": _armed(_q_ids_preserve),
         "custom_dict_convert": _armed(_q_custom_dict),
-        "shard_manifest": _armed(_q_shard_manifest),
         "zho_check_transcripts": _armed(_q_zho_transcripts),
         "dedup_exact_prehash": _armed(_q_dedup_exact_prehash),
         "dedup_ngram_jaccard": _armed(_q_dedup_ngram_jaccard),
-        "skew_join_priority": _armed(_q_skew_join_priority),
         "textstats": _armed(_q_textstats),
         "quality_quantiles": _armed(_q_quality_quantiles),
-        "multimodal_features": _armed(_q_multimodal_features),
-        "multimodal_decode": _armed(_q_multimodal_decode),
         "decontaminate_ngram": _armed(_q_decontaminate_ngram),
         "sample_stratified": _armed(_q_sample_stratified),
         "quality_repetition": _armed(_q_quality_repetition),
@@ -1368,58 +1281,8 @@ FROM d GROUP BY text
         "dedup_components_star": _dedup_components_oracle(),
         "dedup_canonical": _dedup_canonical_oracle(),
         "dedup_incremental": _dedup_incremental_oracle(),
-        "skew_join_priority": """
-SELECT o.o_orderpriority,
-       sum(floor(l.l_extendedprice * (1 - l.l_discount) * 100)::BIGINT)::BIGINT
-         AS revenue_cents,
-       count(*) AS n_lines
-FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-GROUP BY o.o_orderpriority
-""",
         "textstats": _textstats_oracle(),
         "quality_quantiles": _quality_quantiles_oracle(),
-        "multimodal_features": """
-SELECT doc_id,
-       octet_length(encode(coalesce(text, '')))::BIGINT AS n_bytes,
-       'opaque' AS format,
-       NULL::VARCHAR AS mode,
-       NULL::INT AS width,
-       NULL::INT AS height
-FROM documents
-""",
-        # closed-form replay of multimodal.synth_image_payload + decode:
-        # dims/format/mode from doc_id, per-channel sums by folding the
-        # pixel formula over a bounded (x, y, c) grid. Gray images
-        # replicate channel 0 (channel_sums contract).
-        "multimodal_decode": """
-WITH imgs AS (
-  SELECT doc_id,
-         (16 + doc_id % 93)::INT AS width,
-         (12 + doc_id % 61)::INT AS height,
-         CASE WHEN doc_id % 3 = 2 THEN 'bmp' ELSE 'png' END AS format,
-         CASE WHEN doc_id % 3 = 1 THEN 'L' ELSE 'RGB' END AS mode,
-         CASE WHEN doc_id % 3 = 1 THEN 1 ELSE 3 END::INT AS channels
-  FROM documents WHERE doc_id % 13 = 0
-),
-sums AS (
-  SELECT i.doc_id, c.c,
-         sum((i.doc_id * 7 + 3 * x.x + 5 * y.y + 11 * c.c) % 256)::BIGINT AS s
-  FROM imgs i
-  CROSS JOIN generate_series(0, 108) AS x(x)
-  CROSS JOIN generate_series(0, 72) AS y(y)
-  CROSS JOIN generate_series(0, 2) AS c(c)
-  WHERE x.x < i.width AND y.y < i.height AND c.c < i.channels
-  GROUP BY 1, 2
-)
-SELECT i.doc_id, i.format, i.mode, i.width, i.height, i.channels,
-       r.s AS sum_r,
-       coalesce(g.s, r.s) AS sum_g,
-       coalesce(b.s, r.s) AS sum_b
-FROM imgs i
-JOIN sums r ON r.doc_id = i.doc_id AND r.c = 0
-LEFT JOIN sums g ON g.doc_id = i.doc_id AND g.c = 1
-LEFT JOIN sums b ON b.doc_id = i.doc_id AND b.c = 2
-""",
         # full replay of curation.decontaminate: same 13-grams, same
         # md5-prefix 60-bit hashes, same distinct-hit counts
         "decontaminate_ngram": """
@@ -1471,7 +1334,6 @@ SELECT doc_id, lang, n_tokens FROM c WHERE cum <= budget
         "mixture_rebalance": _mixture_oracle(),
         "dedup_bloom_prefilter": _bloom_oracle(),
         "pack_chunks": _pack_oracle(),
-        "shard_manifest": _shard_manifest_oracle(),
         "curation_e2e": _curation_e2e_oracle(),
         "st_ts_goldens": _values_oracle(
             [(i, op, e) for i, op, _t, e in _ST_TS_GOLDENS],
@@ -1913,12 +1775,6 @@ r AS (SELECT doc_id, lang, score,
 SELECT doc_id, lang, score FROM r
 WHERE rn <= least(n, (n * {_TOP_FRAC_PPM} + 999999) // 1000000)
 """
-
-
-def _shard_manifest_oracle() -> str:
-    from openccnet_spark.operators.shards import sql_shard_manifest
-
-    return sql_shard_manifest(_SHARD_TOKENS)
 
 
 def _pack_oracle() -> str:

@@ -77,16 +77,11 @@ def _write_output(path: str | None, text: str, encoding: str) -> None:
 
 def _converter(custom_dicts: list[str]):
     from .convert import Converter
-    from .dictionary import load_bundle, load_custom_specs, parse_dict_text
+    from .dictionary import load_bundle, load_custom_specs
 
     bundle = load_bundle()
     if custom_dicts:
-        overrides: dict = {}
-        appends: dict = {}
-        for slot, mode, text in load_custom_specs(custom_dicts):
-            table = parse_dict_text(text)
-            (overrides if mode == "override" else appends).setdefault(slot, {}).update(table)
-        bundle = bundle.with_custom(overrides or None, appends or None)
+        bundle = bundle.with_custom_specs(load_custom_specs(custom_dicts))
     return Converter(bundle)
 
 

@@ -332,6 +332,17 @@ class DictionaryBundle:
             dict(self.meta),
         )
 
+    def with_custom_specs(self, specs) -> "DictionaryBundle":
+        """``with_custom`` over ``[(slot, 'append'|'override', dict_text), ...]``
+        (the ``load_custom_specs`` form). Repeated specs for one slot and
+        mode merge, a later spec's entry winning per key."""
+        overrides: dict = {}
+        appends: dict = {}
+        for slot, mode, text in specs:
+            target = overrides if mode == "override" else appends
+            target.setdefault(slot, {}).update(parse_dict_text(text))
+        return self.with_custom(overrides, appends)
+
 
 @lru_cache(maxsize=1)
 def load_bundle(path: str | None = None) -> DictionaryBundle:

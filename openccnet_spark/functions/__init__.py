@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType
 
 from ..convert import Converter
-from ..dictionary import load_bundle, parse_dict_text
+from ..dictionary import load_bundle
 
 
 @lru_cache(maxsize=32)
@@ -52,15 +52,7 @@ def _worker_converter(
     else:
         bundle = load_bundle()
     if custom_key:
-        overrides: dict = {}
-        appends: dict = {}
-        for slot, mode, text in custom_key:
-            target = overrides if mode == "override" else appends
-            # repeated specs for the same slot/mode MERGE (later entries
-            # win per key) — same rule as cli._converter, so the CLI and
-            # the distributed UDF path apply identical custom tables
-            target.setdefault(slot, {}).update(parse_dict_text(text))
-        bundle = bundle.with_custom(overrides=overrides, appends=appends)
+        bundle = bundle.with_custom_specs(custom_key)
     return Converter(bundle)
 
 

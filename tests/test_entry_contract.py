@@ -12,7 +12,7 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF_DIR = "/root/testdata/sf0.01"
-_TABLES = ("orders", "lineitem", "documents")
+_TABLES = ("documents",)
 
 
 @pytest.fixture(scope="module")

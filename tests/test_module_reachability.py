@@ -14,7 +14,10 @@ listed in a module's ``__all__`` is public API and counts). Deleting a
 caller must take the helpers that only it used along; deleting a driver
 query must take its oracle helpers along.
 
-A third check keeps the driver contract about the engine: every query in
+A third check pins the modules that only the driver contract reaches, so
+none is added unnoticed.
+
+A fourth check keeps the driver contract about the engine: every query in
 ``__spark_entry__.queries()`` must reach a name imported from the package,
 directly or through a top-level helper of the driver file. A query that
 reaches none tests Spark, not the engine.
@@ -74,18 +77,19 @@ def _imports(path: Path) -> set[str]:
     return found
 
 
-def _roots() -> list[Path]:
+def _roots(driver: bool = True) -> list[Path]:
     roots = [ROOT / PACKAGE / "cli.py", ROOT / PACKAGE / "__main__.py"]
     roots += sorted((ROOT / "jobs").glob("*.py"))
     roots += sorted((ROOT / "perfbench").glob("*.py"))  # perfbench/tests/ is not a root
     roots += sorted((ROOT / "tools").glob("*.py"))
-    roots.append(DRIVER)
+    if driver:
+        roots.append(DRIVER)
     return roots
 
 
-def _reached() -> set[str]:
+def _reached(driver: bool = True) -> set[str]:
     seen: set[str] = set()
-    todo = [_module_name(p) for p in _roots()]
+    todo = [_module_name(p) for p in _roots(driver)]
     while todo:
         name = todo.pop()
         if name in seen:
@@ -98,10 +102,36 @@ def _reached() -> set[str]:
     return seen
 
 
+def _package_modules() -> set[str]:
+    return {_module_name(p) for p in (ROOT / PACKAGE).rglob("*.py")}
+
+
 def test_every_package_module_is_reachable():
-    modules = {_module_name(p) for p in (ROOT / PACKAGE).rglob("*.py")}
-    unreached = sorted(modules - _reached())
+    unreached = sorted(_package_modules() - _reached())
     assert not unreached, f"modules no entry point imports: {unreached}"
+
+
+#: Package modules that only the driver contract reaches. A new driver-only
+#: module fails the check below; deleting or re-homing one shortens this list.
+DRIVER_ONLY = {
+    f"{PACKAGE}.{name}"
+    for name in (
+        "fixtures",
+        "operators.boilerplate",
+        "operators.passages",
+        "operators.repetition",
+        "operators.substrings",
+        "sources.pdf_synth",
+        "sources.snapshots",
+        "sources.textfiles",
+        "sources.transcripts",
+        "streaming",
+    )
+}
+
+
+def test_driver_only_modules_are_pinned():
+    assert sorted(_package_modules() - _reached(driver=False)) == sorted(DRIVER_ONLY)
 
 
 def _names(node: ast.AST) -> Counter:

@@ -70,24 +70,6 @@ def test_quality_quantiles_has_no_window(spark):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_salted_join_carries_salt_in_join_keys(spark):
-    """The salted join must actually join on (key, salt) — otherwise the
-    hot key still lands on one reducer."""
-    from pyspark.sql import functions as F
-
-    from openccnet_spark.operators.skew import salted_join
-
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
-        F.col("l_orderkey").alias("o_orderkey"), "l_linenumber"
-    )
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
-        "o_orderkey", "o_orderpriority"
-    )
-    df = salted_join(li, orders, ["o_orderkey"], F.col("l_linenumber"), n_salt=4)
-    plan = _plan(df)
-    assert "_salt" in plan
-
-
 def test_conv_fold_is_one_conv_shuffle_no_window(spark):
     """conv_fold_tools must be a single hashpartitioning(conv_id)
     exchange feeding a JVM aggregate fold — never a Window over turns

@@ -1,12 +1,12 @@
 """Tests for the training-data operators: dedup, connected components,
-textstats, multimodal plumbing, encrypted PDF conversion."""
+textstats, encrypted PDF conversion."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from openccnet_spark.operators import dedup, multimodal, textstats
+from openccnet_spark.operators import dedup, textstats
 
 SF = "/root/testdata/sf0.001"
 
@@ -73,50 +73,6 @@ def test_textstats_consistency(spark, docs):
         assert r.ws >= 1 and r.re_tok >= r.ws - 1
         assert 0 <= r.q <= 1000
         assert r.fp >= 0
-
-
-def test_multimodal_plumbing(spark, docs):
-    payloads = multimodal.with_binary_payload(docs)
-    feats = multimodal.extract_image_features(payloads).collect()
-    assert len(feats) == docs.count()
-    import zlib
-
-    texts = {r.doc_id: r.text for r in docs.collect()}
-    for r in feats[:20]:
-        raw = texts[r.doc_id].encode("utf-8")
-        assert r.n_bytes == len(raw)
-        assert r.checksum == zlib.crc32(raw)
-        # text bytes are not an image -> documented opaque fallback
-        assert r.format == "opaque"
-        assert r.width is None and r.height is None and r.mode is None
-    frames = multimodal.frame_sample_plan(payloads)
-    assert frames.count() > docs.count()  # exploded frame indexes
-
-
-def test_multimodal_real_decode(spark, docs):
-    """Distributed synth -> real PNG/BMP decode; features must equal the
-    closed-form ground truth of the synthesis formula."""
-    subset = docs.filter(F.col("doc_id") % 13 == 0)
-    feats = multimodal.extract_image_features(
-        multimodal.with_synth_image_payload(subset)
-    ).collect()
-    assert len(feats) == subset.count() > 0
-    for r in feats:
-        d = r.doc_id
-        w, h = 16 + d % 93, 12 + d % 61
-        kind = d % 3
-        channels = 1 if kind == 1 else 3
-        assert (r.width, r.height, r.channels) == (w, h, channels), r
-        assert r.format == ("bmp" if kind == 2 else "png")
-        assert r.mode == ("L" if kind == 1 else "RGB")
-        exp = [
-            sum((d * 7 + 3 * x + 5 * y + 11 * c) % 256
-                for x in range(w) for y in range(h))
-            for c in range(channels)
-        ]
-        if channels == 1:
-            exp = [exp[0]] * 3
-        assert (r.sum_r, r.sum_g, r.sum_b) == tuple(exp), r
 
 
 def test_simhash_banded_oracle_equals_brute():
