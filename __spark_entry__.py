@@ -758,6 +758,22 @@ def _q_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+_SHARD_TOKENS = 1000
+
+
+def _q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic training-shard assignment + manifest
+    (operators/shards.py): shard = the packing chunk of each doc's exact
+    global start offset (doc-granular, same-membership on any
+    partitioning — the property a resumable training loader needs);
+    manifest digests are order-free bit_xor of 60-bit doc hashes. The
+    oracle is the naive single-window prefix sum grouped identically."""
+    from openccnet_spark.operators.shards import shard_manifest
+
+    docs = _read(spark, sf_dir, "documents")
+    return shard_manifest(docs, _SHARD_TOKENS)
+
+
 _BLOOM_M_BITS = 1 << 10  # deliberately tiny so false positives are
 # actually exercised at sf0.01 (~62% fill, ~24% FP) and the oracle must
 # reproduce every one; the operator's scale default is 2^20
@@ -1149,6 +1165,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "textfiles_encodings": _armed(_q_textfiles_encodings),
         "ids_preserve_goldens": _armed(_q_ids_preserve),
         "custom_dict_convert": _armed(_q_custom_dict),
+        "shard_manifest": _armed(_q_shard_manifest),
         "zho_check_transcripts": _armed(_q_zho_transcripts),
         "dedup_exact_prehash": _armed(_q_dedup_exact_prehash),
         "dedup_ngram_jaccard": _armed(_q_dedup_ngram_jaccard),
@@ -1334,6 +1351,7 @@ SELECT doc_id, lang, n_tokens FROM c WHERE cum <= budget
         "mixture_rebalance": _mixture_oracle(),
         "dedup_bloom_prefilter": _bloom_oracle(),
         "pack_chunks": _pack_oracle(),
+        "shard_manifest": _shard_manifest_oracle(),
         "curation_e2e": _curation_e2e_oracle(),
         "st_ts_goldens": _values_oracle(
             [(i, op, e) for i, op, _t, e in _ST_TS_GOLDENS],
@@ -1775,6 +1793,12 @@ r AS (SELECT doc_id, lang, score,
 SELECT doc_id, lang, score FROM r
 WHERE rn <= least(n, (n * {_TOP_FRAC_PPM} + 999999) // 1000000)
 """
+
+
+def _shard_manifest_oracle() -> str:
+    from openccnet_spark.operators.shards import sql_shard_manifest
+
+    return sql_shard_manifest(_SHARD_TOKENS)
 
 
 def _pack_oracle() -> str:

@@ -321,8 +321,9 @@ def conversation_pack(
     ``packing.pack_chunks``' exact distributed prefix sum (canonical
     (60-bit md5 key, conv_id) order) places each conversation, and its
     bin is the chunk its start offset falls in — conversations land
-    whole, bins run over the cap by at most one conversation.
-    Deterministic at any partitioning.
+    whole, bins run over the cap by at most one conversation (the same
+    doc-granular rule ``shards.assign_shards`` uses). Deterministic at
+    any partitioning.
 
     Output: ``(conv_id, n_tokens, start_offset, bin_id)``.
     """

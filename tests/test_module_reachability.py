@@ -120,6 +120,7 @@ DRIVER_ONLY = {
         "operators.boilerplate",
         "operators.passages",
         "operators.repetition",
+        "operators.shards",
         "operators.substrings",
         "sources.pdf_synth",
         "sources.snapshots",
